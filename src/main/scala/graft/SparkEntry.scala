@@ -116,14 +116,14 @@ object SparkEntry {
       // RC4-encrypted / CJK-CMap sevenths) written to a scratch dir, ingested by
       // the SAME binaryFile scan → RealPdf parse → PG/TX → Extractor
       // path production uses, reduced to text rows. The oracle is the
-      // GENERATOR's ground truth (RealPdfBench.pagesOf) — independent
+      // GENERATOR's ground truth (PdfGen.pagesOf) — independent
       // of the parser.
       import s.implicits._
       val tmp = scratchDir("graft-expdf")
       (0 until 60).foreach { i =>
         java.nio.file.Files.write(
           java.nio.file.Paths.get(tmp, f"doc_$i%04d.pdf"),
-          graft.tools.RealPdfBench.makePdf(i.toLong, i % 7))
+          graft.gen.PdfGen.makePdf(i.toLong, i % 7))
       }
       graft.sources.RawFiles.read(s, tmp)
         .flatMap(d => Extractor.extractRows(d))
@@ -1867,7 +1867,7 @@ object SparkEntry {
       // emits one span per page, every reading-order line newline-
       // terminated (pdfminer get_text() semantics)
       (0 until 60).flatMap { i =>
-        graft.tools.RealPdfBench.pagesOf(i.toLong, i % 7).zipWithIndex
+        graft.gen.PdfGen.pagesOf(i.toLong, i % 7).zipWithIndex
           .map { case (lines, k) =>
             (f"doc_$i%04d.pdf", k, lines.map(_ + "\n").mkString) }
       }.toDF("doc_id", "ord", "text")

@@ -13,6 +13,17 @@ import org.apache.spark.sql.functions._
   *    candidate pairs are verified within buckets only;
   *  - SimHash reduces each doc to 64 bits; banding on 16-bit sub-keys
   *    finds all pairs within Hamming distance 3 without an O(n^2) join.
+  *
+  * NOT all pure plan builders (r06): every op that self-joins a persisted
+  * frame materializes that frame eagerly (one job) at CALL time, so the
+  * join's two side stages read the cache instead of racing to compute
+  * it under AQE — [[ngramJaccardPairs]], [[duplicatedWindows]] (and
+  * [[cutDuplicatedWindows]] over it), [[minhashLshPairs]],
+  * [[hammingPairs64]] (and [[simhashPairs]] over it),
+  * [[embeddingNearDupPairs]] and [[embeddingNearDupPairsMultiProbe]].
+  * Callers that only want the plan (explain/plan dumps) still pay that
+  * pass. [[resolveClusters]] (and [[removeNearDups]] over it) runs jobs
+  * at call time too.
   */
 object Dedup {
 
@@ -257,12 +268,8 @@ object Dedup {
     * Emits distinct candidate pairs (id_a < id_b) with their estimated
     * Jaccard (fraction of equal signature positions).
     *
-    * NOT a pure plan builder (r06): the banded frame is eagerly
-    * materialized (one job) at CALL time so the self-join's two side
-    * stages read the cache instead of racing to compute it — callers
-    * that only want the plan (explain/plan dumps) pay the signature
-    * pass. The same holds for every pairs- and windows-producing op
-    * below that self-joins a persisted frame.
+    * Eager: the banded frame is materialized at call time (see the
+    * object scaladoc).
     *
     * Shuffle shape: the band self-join moves only (id, band, band-hash)
     * rows — 24 bytes x bands per doc; the k-long signatures shuffle ONCE

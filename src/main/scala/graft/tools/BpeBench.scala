@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.functions.BpeTokenize
 import graft.ops.TextOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Volume evidence for the trainable byte-level BPE: learns a merge
@@ -29,11 +28,7 @@ object BpeBench {
 
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toInt).getOrElse(2000000)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(32)
     import spark.implicits._
 
     def docs(n: Long) = spark.range(n)
@@ -59,13 +54,7 @@ object BpeBench {
       f"$totalTokens BPE tokens vs $totalPre pre-tokens " +
       f"(${totalTokens.toDouble / totalPre}%.2f subwords/pre-token) |"
     println("[bpe-bench] " + line)
-    val benchMd = if (new java.io.File("BENCH.md").exists()) "BENCH.md"
-                  else "/root/repo/BENCH.md"
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(benchMd),
-      "\n" + line + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    catch { case _: java.io.IOException => () }
+    appendBenchMd(line)
     spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.ops.CorpusPipeline
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus-cleaning demo over a testdata documents table plus
@@ -13,11 +12,7 @@ import org.apache.spark.sql.functions._
 object CleanDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(32)
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
@@ -45,16 +40,7 @@ object CleanDemo {
       stages.map(s => s"${s.stage}=${s.docs}").mkString(" → ") +
       f" → final=$outN in $sec%.1f s @ local[32] |"
     println("[clean-demo] " + line)
-    // resolve BENCH.md like Bench.scala: cwd first, /root/repo fallback —
-    // a hardcoded path threw from other checkouts (ADVICE r02)
-    val benchMd =
-      if (new java.io.File("BENCH.md").exists()) "BENCH.md"
-      else "/root/repo/BENCH.md"
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(benchMd), "\n" + line + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    catch { case _: java.io.IOException => () } // demo result already printed
+    appendBenchMd(line)
     spark.stop()
   }
 }

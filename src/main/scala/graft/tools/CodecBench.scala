@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import java.nio.file.Files
 
 /** Extraction-write codec tradeoff: same 300k-doc job at local[8], one
@@ -8,11 +7,7 @@ import java.nio.file.Files
   */
 object CodecBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.files.maxPartitionBytes", (4L << 20).toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session(8)
     import spark.implicits._
     val in = Files.createTempDirectory("codec-in").toString
     graft.gen.CorpusGen.dataset(spark, 300000, 42L)
@@ -20,8 +15,6 @@ object CodecBench {
     val docs = spark.read.parquet(in).as[graft.core.InputDoc]
     def size(p: java.io.File): Long =
       if (p.isDirectory) p.listFiles.map(size).sum else p.length()
-    def deleteRec(p: java.io.File): Unit = {
-      if (p.isDirectory) p.listFiles.foreach(deleteRec); p.delete() }
     val rows = Seq("snappy", "zstd", "lz4", "uncompressed").map { codec =>
       spark.conf.set("spark.sql.parquet.compression.codec", codec)
       val best = (1 to 3).map { _ =>
@@ -40,12 +33,7 @@ object CodecBench {
     val line = "| extraction write codec (300k docs, local[8], best of 3) | " +
       rows.mkString("; ") + " |"
     println("[codec-bench] " + line)
-    val benchMd = if (new java.io.File("BENCH.md").exists()) "BENCH.md"
-                  else "/root/repo/BENCH.md"
-    try Files.writeString(java.nio.file.Paths.get(benchMd),
-      "\n" + line + "\n", java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    catch { case _: java.io.IOException => () }
+    appendBenchMd(line)
     deleteRec(new java.io.File(in))
     spark.stop()
   }

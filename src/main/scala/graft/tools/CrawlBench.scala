@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import java.nio.file.{Files, Paths}
 
@@ -22,12 +21,7 @@ import java.nio.file.{Files, Paths}
 object CrawlBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(600)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.files.maxPartitionBytes", (4L << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(32)
 
     val dir = Files.createTempDirectory("graft-crawl-corpus")
     Files.createDirectories(Paths.get(dir.toString, "warc"))
@@ -76,17 +70,8 @@ object CrawlBench {
     println("[crawl-bench] " + line)
     require(gotMedia == wantMedia, "media records lost")
     require(textDocs == wantTextDocs, "text records lost")
-    val benchMd = if (new java.io.File("BENCH.md").exists()) "BENCH.md"
-                  else "/root/repo/BENCH.md"
-    try Files.writeString(Paths.get(benchMd), "\n" + line + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    catch { case _: java.io.IOException => () }
+    appendBenchMd(line)
 
-    def deleteRec(p: java.io.File): Unit = {
-      if (p.isDirectory) p.listFiles.foreach(deleteRec)
-      p.delete(): Unit
-    }
     deleteRec(dir.toFile); deleteRec(new java.io.File(out))
     spark.stop()
   }

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dumps `explain("formatted")` for every SparkEntry query to PLANS.md —
@@ -11,11 +10,7 @@ import java.nio.file.{Files, Paths}
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session(8)
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans for every driver query\n\n")
     sb.append(s"Generated by `graft.tools.ExplainDump` over `$sfDir`. " +
@@ -32,7 +27,7 @@ object ExplainDump {
         sb.append(s"\n## $name\n\nERROR: ${e.getMessage}\n")
       }
     }
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"[plans] wrote ${sb.length} chars for " +
       s"${SparkEntry.queries.size} queries")
     spark.stop()

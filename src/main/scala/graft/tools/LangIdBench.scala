@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Volume evidence for the native trigram language-ID expression:
@@ -13,11 +12,7 @@ import org.apache.spark.sql.functions._
 object LangIdBench {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toInt).getOrElse(2000000)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(32)
     import spark.implicits._
 
     val nLangs = graft.functions.TrigramLangId.Seeds.all.size
@@ -49,13 +44,7 @@ object LangIdBench {
     println("[langid-bench] " + line)
     println("[langid-bench] counts: " + byLang.sortBy(t => (t._2, t._1))
       .map { case (l, w, c) => s"$w->$l=$c" }.mkString(" "))
-    val benchMd = if (new java.io.File("BENCH.md").exists()) "BENCH.md"
-                  else "/root/repo/BENCH.md"
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(benchMd),
-      "\n" + line + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    catch { case _: java.io.IOException => () }
+    appendBenchMd(line)
     spark.stop()
   }
 }

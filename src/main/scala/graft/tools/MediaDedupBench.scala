@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.ops.{MediaDedup, Multimodal}
-import org.apache.spark.sql.SparkSession
 
 /** Volume evidence for perceptual media dedup: hashes `nMedia` RawGray
   * images (48×32 noise; every 10th a one-pixel-perturbed copy of its
@@ -39,11 +38,7 @@ object MediaDedupBench {
 
   def main(args: Array[String]): Unit = {
     val nMedia = args.headOption.map(_.toInt).getOrElse(200000)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(32)
     import spark.implicits._
 
     val media = spark.range(nMedia)
@@ -68,13 +63,7 @@ object MediaDedupBench {
       f"one-pixel near-dup recall ${recall * 100}%.2f%% " +
       f"($recovered/$nInjected), ${pairs.length} total pairs |"
     println("[mediadedup-bench] " + line)
-    val benchMd = if (new java.io.File("BENCH.md").exists()) "BENCH.md"
-                  else "/root/repo/BENCH.md"
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(benchMd),
-      "\n" + line + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    catch { case _: java.io.IOException => () }
+    appendBenchMd(line)
     spark.stop()
   }
 }

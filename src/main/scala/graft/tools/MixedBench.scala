@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 /** Mixed-format ingestion throughput + recall: [[graft.gen.MixedGen]]'s
   * six-way corpus (genuine PDFs with image/form XObjects and inline
@@ -19,12 +18,7 @@ import java.nio.file.{Files, Paths}
 object MixedBench {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toInt).getOrElse(12000)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.files.maxPartitionBytes", (4L << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(32)
 
     val dir = Files.createTempDirectory("graft-mixed-corpus")
     graft.gen.MixedGen.write(dir.toString, nDocs)
@@ -70,17 +64,8 @@ object MixedBench {
     println("[mixed-bench] " + line)
     require(gotMedia == wantMedia, "media spans lost")
     require(textDocs == wantTextDocs, "text docs lost")
-    val benchMd = if (new java.io.File("BENCH.md").exists()) "BENCH.md"
-                  else "/root/repo/BENCH.md"
-    try Files.writeString(Paths.get(benchMd), "\n" + line + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    catch { case _: java.io.IOException => () }
+    appendBenchMd(line)
 
-    def deleteRec(p: java.io.File): Unit = {
-      if (p.isDirectory) p.listFiles.foreach(deleteRec)
-      p.delete(): Unit
-    }
     deleteRec(dir.toFile); deleteRec(new java.io.File(out))
     spark.stop()
   }

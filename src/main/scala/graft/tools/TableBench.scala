@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Volume evidence for table reconstruction: builds `nPages` synthetic
   * pages of positioned runs (a title, an R×C grid table with per-page
@@ -14,11 +13,7 @@ import org.apache.spark.sql.SparkSession
 object TableBench {
   def main(args: Array[String]): Unit = {
     val nPages = args.headOption.map(_.toInt).getOrElse(500000)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(32)
     import spark.implicits._
 
     def dims(i: Long): (Int, Int) = ((3 + i % 3).toInt, (2 + i % 2).toInt)
@@ -51,13 +46,7 @@ object TableBench {
       f"recall ${got.toDouble / want * 100}%.2f%%) in $sec%.1f s = " +
       f"${nPages / sec}%.0f pages/s, ${got / sec}%.0f cells/s @ local[32] |"
     println("[table-bench] " + line)
-    val benchMd = if (new java.io.File("BENCH.md").exists()) "BENCH.md"
-                  else "/root/repo/BENCH.md"
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(benchMd),
-      "\n" + line + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    catch { case _: java.io.IOException => () }
+    appendBenchMd(line)
     spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.pipeline.ExtractJob
-import org.apache.spark.sql.SparkSession
 import java.nio.file.Files
 
 /** Volume check: run the full extraction job at 10x the bench corpus on
@@ -12,13 +11,7 @@ import java.nio.file.Files
 object VolumeCheck {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(2000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", (16L << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(32)
     import spark.implicits._
 
     val in = Files.createTempDirectory("graft-vol-in").toString
@@ -40,13 +33,8 @@ object VolumeCheck {
       f"$rows output rows; metrics: ${stats.getLong(0)} docs, " +
       f"task p50 ${stats.getDouble(2)}%.0f ms / max ${stats.getLong(1)} ms (skew bound) |"
     println("[volume] " + line)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/BENCH.md"), "\n" + line + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) p.listFiles.foreach(rm); p.delete() }
-    rm(new java.io.File(in)); rm(new java.io.File(out))
+    appendBenchMd(line)
+    deleteRec(new java.io.File(in)); deleteRec(new java.io.File(out))
     spark.stop()
   }
 }

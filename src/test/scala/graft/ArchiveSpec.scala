@@ -3,8 +3,6 @@ package graft
 import graft.extract.ArchiveExtractor
 import graft.gen.ArchiveGen
 import graft.sources.RawFiles
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -15,15 +13,7 @@ import java.nio.file.Files
   * through the batch scan and the streaming decode, nested archives
   * dropped.
   */
-class ArchiveSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ArchiveSpec extends AnyFunSuite with SparkSuite {
 
   private def zipOf(ms: Seq[(String, Array[Byte])]): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()

@@ -3,8 +3,6 @@ package graft
 import graft.extract.CharsetSniff
 import graft.gen.CharsetGen
 import graft.sources.RawFiles
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.{Charset, StandardCharsets}
 import java.nio.file.Files
@@ -14,15 +12,7 @@ import java.nio.file.Files
   * quirks, the strict UTF-8 validator, and the end-to-end ingest path
   * against CharsetGen's encoded ground truth.
   */
-class CharsetSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CharsetSpec extends AnyFunSuite with SparkSuite {
 
   test("label mapping: WHATWG quirks land on the superset charsets") {
     def n(l: String): Option[String] = CharsetSniff.label(l).map(_.name)

@@ -3,8 +3,6 @@ package graft
 import graft.extract.EmlExtractor
 import graft.gen.EmlGen
 import graft.sources.RawFiles
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.nio.file.Files
@@ -14,15 +12,7 @@ import java.nio.file.Files
   * resolution), attachment fan-out, mbox spools, and the end-to-end
   * ingest path against EmlGen's hand-assembled ground truth.
   */
-class EmlSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class EmlSpec extends AnyFunSuite with SparkSuite {
 
   private val CRLF = "\r\n"
   private def b(s: String): Array[Byte] = s.getBytes(ISO_8859_1)

@@ -1,22 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke of the driver contract: entry() rows > 0; every query runs and
   * returns rows at sf0.001; every oracleSql key exists in queries.
   */
-class EntrySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class EntrySpec extends AnyFunSuite with SparkSuite {
 
   test("entry() returns rows (driver smoke contract)") {
     spark.sparkContext.setLogLevel("WARN")

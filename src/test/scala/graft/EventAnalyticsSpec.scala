@@ -1,20 +1,9 @@
 package graft
 
 import graft.streaming.EventAnalytics
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class EventAnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class EventAnalyticsSpec extends AnyFunSuite with SparkSuite {
 
   test("streaming windowed agg == batch windowed agg on the same events") {
     spark.sparkContext.setLogLevel("WARN")

@@ -4,23 +4,12 @@ import graft.core._
 import graft.gen.CorpusGen
 import graft.oracle.RefOracle
 import graft.pipeline.{Checkpoint, ExtractJob}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
-class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ExtractJobSpec extends AnyFunSuite with SparkSuite {
 
   private def tmpDir(name: String): String = {
     val p = Files.createTempDirectory(s"graft-$name")
@@ -284,25 +273,47 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("salting decision from a bounded sample when input exceeds the cap") {
     import spark.implicits._
     // 12 input partitions > skewSampleParts=2 → the stride-sampled path
-    // decides from every-6th partition (2 kept). Uniform corpus: OFF
-    // (the partition-fraction-scaled total keeps fair-share relative
-    // skew honest); every-3rd-doc-big corpus: ON (round-robin
-    // repartition spreads the big docs densely, so every kept
-    // partition contains them with certainty at these proportions).
-    val uniform = CorpusGen.dataset(spark, 300, 7L).repartition(12)
-      .as[core.InputDoc]
+    // decides from every-6th partition (partitions 0 and 6). parallelize
+    // slices the 300 docs into 12 consecutive runs of 25, so which docs
+    // the sample sees is fixed. Uniform corpus: OFF (the
+    // partition-fraction-scaled total keeps fair-share relative skew
+    // honest); every-3rd-doc-big corpus: ON (both kept partitions hold
+    // big docs).
+    val uniform = spark.createDataset(
+      spark.sparkContext.parallelize(CorpusGen.corpus(7L, 300), 12))
     val repA = ExtractJob.run(spark, uniform,
       ExtractJob.Config(tmpDir("sampA"), "pa", groups = 1, partitions = 8,
         skewSampleParts = 2))
     assert(!repA.salted, "uniform corpus must not salt under sampling")
-    val skewed = spark.createDataset((0 until 300).map(i =>
-      core.InputDoc(f"s$i%04d", Vector(core.Span("text",
-        (if (i % 3 == 0) "x" * 65536 else "y" * 100), null, 0)))))
-      .repartition(12).as[core.InputDoc]
+    val skewed = spark.createDataset(spark.sparkContext.parallelize(
+      (0 until 300).map(i =>
+        core.InputDoc(f"s$i%04d", Vector(core.Span("text",
+          (if (i % 3 == 0) "x" * 65536 else "y" * 100), null, 0)))), 12))
     val repB = ExtractJob.run(spark, skewed,
       ExtractJob.Config(tmpDir("sampB"), "pb", groups = 1, partitions = 8,
         bigDocBytes = 32768, skewSampleParts = 2))
     assert(repB.salted, "sampled stats must detect the big-doc corpus")
+    // the documented miss mode (ExtractJob's BEHAVIOR DELTA note): one
+    // 2 MiB doc alone in partition 1, which the stride never reads → no
+    // salting, and the monster still extracts intact as one straggler on
+    // the narrow path
+    val docs = (0 until 300).map(i =>
+      core.InputDoc(if (i == 25) "monster" else f"u$i%04d",
+        Vector(core.Span("text",
+          if (i == 25) "x" * (2 << 20) else "y" * 100, null, 0))))
+    val rdd = spark.sparkContext.parallelize(docs, 12)
+    assert(rdd.mapPartitionsWithIndex((p, it) =>
+      it.filter(_.doc_id == "monster").map(_ => p)).collect().toSeq ==
+      Seq(1))
+    val outC = tmpDir("sampC")
+    val repC = ExtractJob.run(spark, spark.createDataset(rdd),
+      ExtractJob.Config(outC, "pc", groups = 1, partitions = 8,
+        skewSampleParts = 2))
+    assert(!repC.salted, "an unsampled monster must not flip the decision")
+    assert(repC.docsProcessed == 300)
+    val got = ExtractJob.spansView(spark, outC)
+      .where(col("doc_id") === "monster").collect()
+    assert(got.length == 1 && got(0).getString(2) == "x" * (2 << 20))
   }
 
   test("incremental ingestion: grown input table re-extracts ONLY new docs") {

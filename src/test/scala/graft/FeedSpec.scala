@@ -4,8 +4,6 @@ import graft.extract.FeedExtractor
 import graft.extract.FeedExtractor.{Media, Text}
 import graft.gen.FeedGen
 import graft.sources.RawFiles
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
@@ -14,15 +12,7 @@ import java.nio.file.Files
   * bodies, the stripped-text fallback, enclosure media, identity
   * precedence, against FeedGen's hand-assembled ground truth.
   */
-class FeedSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class FeedSpec extends AnyFunSuite with SparkSuite {
 
   test("feed magic: rss/feed/rdf roots accepted, generic xml and prose rejected") {
     assert(FeedExtractor.isFeed(FeedGen.fileBytes(0)))

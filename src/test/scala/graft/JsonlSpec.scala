@@ -3,8 +3,6 @@ package graft
 import graft.extract.JsonlExtractor
 import graft.gen.JsonlGen
 import graft.sources.RawFiles
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -13,15 +11,7 @@ import java.nio.file.Files
   * shard fan-out contract and the generic `.gz` inner-extension
   * routing.
   */
-class JsonlSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class JsonlSpec extends AnyFunSuite with SparkSuite {
 
   test("line semantics: key priority, numeric ids, escapes, drops") {
     assert(JsonlExtractor.parseLine(

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TrigramLangId
@@ -12,15 +10,7 @@ import graft.oracle.PlainOracles
   * the deterministic seed sentences, held-out real sentences, script
   * priority, and codegen execution through a DataFrame.
   */
-class LangIdSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class LangIdSpec extends AnyFunSuite with SparkSuite {
 
   private val langs = TrigramLangId.Seeds.all.map(_._1)
 

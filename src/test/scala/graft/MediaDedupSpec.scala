@@ -2,20 +2,10 @@ package graft
 
 import graft.ops.{Dedup, MediaDedup, Multimodal}
 import graft.oracle.PlainOracles
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class MediaDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MediaDedupSpec extends AnyFunSuite with SparkSuite {
 
   private def mediaDf(rows: Seq[(String, String, Array[Byte])]) = {
     import spark.implicits._

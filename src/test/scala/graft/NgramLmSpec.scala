@@ -3,20 +3,11 @@ package graft
 import graft.functions.{NgramLm, NgramLmScore}
 import graft.ops.TextOps
 import graft.oracle.PlainOracles
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class NgramLmSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class NgramLmSpec extends AnyFunSuite with SparkSuite {
 
   private def docsDf: DataFrame =
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

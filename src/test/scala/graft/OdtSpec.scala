@@ -4,8 +4,6 @@ import graft.extract.OdtExtractor
 import graft.extract.OdtExtractor.{Item, Media, Text}
 import graft.gen.OdtGen
 import graft.sources.RawFiles
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import javax.xml.parsers.DocumentBuilderFactory
@@ -17,15 +15,7 @@ import scala.collection.mutable.ArrayBuffer
   * the scaladoc'd semantics), generator ground truth end-to-end, and
   * the usual corruption storm.
   */
-class OdtSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class OdtSpec extends AnyFunSuite with SparkSuite {
 
   // ---------- DOM twin ----------
 

@@ -2,21 +2,13 @@ package graft
 
 import graft.functions.{Position, PositionScala}
 import graft.ops.{CorpusPipeline, Dedup, Multimodal, Similarity, TextOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class OpsSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import org.apache.spark.sql.Row
-
-  override def afterAll(): Unit = spark.stop()
 
   private def docsDf: DataFrame =
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

@@ -2,9 +2,7 @@ package graft
 
 import graft.gen.CorpusGen
 import graft.pipeline.ExtractJob
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -12,16 +10,7 @@ import java.nio.file.Files
   * pruning, broadcast, top-k, codegen — asserted on the actual plans, not
   * assumed (SURVEY.md §4).
   */
-class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PlanSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val outDir: String = {
     spark.sparkContext.setLogLevel("WARN")

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * XML plus java.nio path normalization — different machinery from the
   * hand scanner, so agreement pins the spec.
   */
-class PptxSpec extends AnyFunSuite {
+class PptxSpec extends AnyFunSuite with SparkSuite {
 
   // ---------- the DOM twin ----------
 
@@ -278,29 +278,23 @@ class PptxSpec extends AnyFunSuite {
   }
 
   test("ingest e2e: .pptx and a lying-extension .html route to slides") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("pptx-e2e")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", false).getOrCreate()
-    try {
-      val tmp = java.nio.file.Files.createTempDirectory("pptx-e2e").toString
-      graft.gen.PptxGen.write(tmp, 4)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(tmp, "mislabeled.html"),
-        graft.gen.PptxGen.fileBytes(2))
-      val rows = graft.sources.RawFiles.read(spark, tmp)
-        .collect().map(d => d.doc_id ->
-          d.spans.map(s => (s.kind, s.text,
-            Option(s.media_ref).map(_.split('#').last).orNull,
-            s.offset))).toMap
-      (0 until 4).foreach { i =>
-        val exp = graft.gen.PptxGen.expectedDoc(i).map(r =>
-          (if (r.kind == "text") "text" else r.kind, r.text,
-            if (r.media_ref == null) null else graft.gen.PptxGen.picPath(i),
-            r.ord))
-        assert(rows(graft.gen.PptxGen.fileName(i)) == exp, s"deck $i")
-      }
-      assert(rows("mislabeled.html").count(_._1 == "image") == 1)
-    } finally spark.stop()
+    val tmp = java.nio.file.Files.createTempDirectory("pptx-e2e").toString
+    graft.gen.PptxGen.write(tmp, 4)
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(tmp, "mislabeled.html"),
+      graft.gen.PptxGen.fileBytes(2))
+    val rows = graft.sources.RawFiles.read(spark, tmp)
+      .collect().map(d => d.doc_id ->
+        d.spans.map(s => (s.kind, s.text,
+          Option(s.media_ref).map(_.split('#').last).orNull,
+          s.offset))).toMap
+    (0 until 4).foreach { i =>
+      val exp = graft.gen.PptxGen.expectedDoc(i).map(r =>
+        (if (r.kind == "text") "text" else r.kind, r.text,
+          if (r.media_ref == null) null else graft.gen.PptxGen.picPath(i),
+          r.ord))
+      assert(rows(graft.gen.PptxGen.fileName(i)) == exp, s"deck $i")
+    }
+    assert(rows("mislabeled.html").count(_._1 == "image") == 1)
   }
 }

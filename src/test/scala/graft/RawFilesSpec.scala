@@ -5,20 +5,10 @@ import graft.extract.Extractor
 import graft.gen.CorpusGen
 import graft.oracle.RefOracle
 import graft.sources.RawFiles
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 
-class RawFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class RawFilesSpec extends AnyFunSuite with SparkSuite {
 
   test("raw directory scan: suffix->kind classification, relative doc_id, media by reference") {
     spark.sparkContext.setLogLevel("WARN")
@@ -255,7 +245,7 @@ class RawFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = Files.createTempDirectory("graft-sniff")
     // a genuine PDF saved as .txt (crawler artifact) → positioned spans
     Files.write(dir.resolve("really_a.txt"),
-      graft.tools.RealPdfBench.makePdf(7L, 0))
+      graft.gen.PdfGen.makePdf(7L, 0))
     // a genuine DOCX served as .html (CMS endpoint) → paragraph spans
     Files.write(dir.resolve("download.html"), graft.gen.MixedGen.fileBytes(8))
     // honest text stays text — even mentioning %PDF- mid-file

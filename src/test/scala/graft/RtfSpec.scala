@@ -12,7 +12,7 @@ import scala.collection.mutable.ArrayBuffer
   * stream, then a token fold — different machinery from the
   * index-walking char machine, so agreement pins the spec.
   */
-class RtfSpec extends AnyFunSuite {
+class RtfSpec extends AnyFunSuite with SparkSuite {
 
   // ---------- the token-fold twin ----------
 
@@ -330,30 +330,24 @@ class RtfSpec extends AnyFunSuite {
   }
 
   test("ingest e2e: .rtf and a lying-extension .txt route to the front end") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("rtf-e2e")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", false).getOrCreate()
-    try {
-      val tmp = java.nio.file.Files.createTempDirectory("rtf-e2e").toString
-      graft.gen.RtfGen.write(tmp, 4)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(tmp, "mislabeled.txt"),
-        graft.gen.RtfGen.fileBytes(2))
-      val rows = graft.sources.RawFiles.read(spark, tmp)
-        .collect().map(d => d.doc_id ->
-          d.spans.map(s => (s.kind, s.text,
-            Option(s.media_ref).map(_.split('/').last).orNull,
-            s.offset))).toMap
-      (0 until 4).foreach { i =>
-        val exp = graft.gen.RtfGen.expectedDoc(i)
-          .map(r => (if (r.kind == "text") "text" else r.kind,
-            r.text, r.media_ref, r.ord))
-        assert(rows(graft.gen.RtfGen.fileName(i)) == exp, s"memo $i")
-      }
-      // the lying .txt decodes as RTF (content magic), not mojibake
-      assert(rows("mislabeled.txt").head._2 ==
-        "Title: Memo 2 échantillon m14")
-    } finally spark.stop()
+    val tmp = java.nio.file.Files.createTempDirectory("rtf-e2e").toString
+    graft.gen.RtfGen.write(tmp, 4)
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(tmp, "mislabeled.txt"),
+      graft.gen.RtfGen.fileBytes(2))
+    val rows = graft.sources.RawFiles.read(spark, tmp)
+      .collect().map(d => d.doc_id ->
+        d.spans.map(s => (s.kind, s.text,
+          Option(s.media_ref).map(_.split('/').last).orNull,
+          s.offset))).toMap
+    (0 until 4).foreach { i =>
+      val exp = graft.gen.RtfGen.expectedDoc(i)
+        .map(r => (if (r.kind == "text") "text" else r.kind,
+          r.text, r.media_ref, r.ord))
+      assert(rows(graft.gen.RtfGen.fileName(i)) == exp, s"memo $i")
+    }
+    // the lying .txt decodes as RTF (content magic), not mojibake
+    assert(rows("mislabeled.txt").head._2 ==
+      "Title: Memo 2 échantillon m14")
   }
 }

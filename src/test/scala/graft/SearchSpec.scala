@@ -1,20 +1,10 @@
 package graft
 
 import graft.ops.Search
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class SearchSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SearchSpec extends AnyFunSuite with SparkSuite {
 
   private def docs = spark.read
     .parquet("/root/testdata/sf0.001/documents.parquet")

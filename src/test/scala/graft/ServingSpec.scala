@@ -1,21 +1,11 @@
 package graft
 
 import graft.ops.Serving
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-class ServingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ServingSpec extends AnyFunSuite with SparkSuite {
 
   test("context assembly: deterministic [Source i] blocks in rank order") {
     import spark.implicits._

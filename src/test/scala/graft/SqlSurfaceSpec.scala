@@ -3,8 +3,6 @@ package graft
 import graft.gen.CorpusGen
 import graft.oracle.RefOracle
 import graft.pipeline.ExtractJob
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -12,16 +10,7 @@ import java.nio.file.Files
   * doc_name→doc_id) runs unchanged via spark.sql over our output table —
   * a user of the reference can keep their queries.
   */
-class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SqlSurfaceSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val ready: Unit = {
     spark.sparkContext.setLogLevel("WARN")

@@ -1,21 +1,11 @@
 package graft
 
 import graft.streaming.StatefulDedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-class StatefulDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StatefulDedupSpec extends AnyFunSuite with SparkSuite {
 
   test("stateful streaming dedup passes each doc_id exactly once across batches") {
     spark.sparkContext.setLogLevel("WARN")

@@ -3,21 +3,10 @@ package graft
 import graft.gen.CorpusGen
 import graft.oracle.RefOracle
 import graft.streaming.StreamingIngest
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-class StreamingIngestSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StreamingIngestSpec extends AnyFunSuite with SparkSuite {
 
   test("streaming ingestion drains new files; restart ingests only new data") {
     spark.sparkContext.setLogLevel("WARN")

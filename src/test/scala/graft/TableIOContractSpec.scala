@@ -5,7 +5,6 @@ import graft.pipeline.ExtractJob
 import graft.sources.{HadoopTableIO, IcebergTableIO, TableIO}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -25,15 +24,7 @@ import java.nio.file.Files
   *     --conf spark.sql.catalog.cat=org.apache.iceberg.spark.SparkCatalog
   *     --conf spark.sql.catalog.cat.type=hadoop|hive|rest ...
   */
-class TableIOContractSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TableIOContractSpec extends AnyFunSuite with SparkSuite {
 
   /** The contract: group overwrite is idempotent (re-put replaces, never
     * duplicates), groups are independent, read() unions all groups.

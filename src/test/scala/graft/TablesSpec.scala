@@ -5,23 +5,13 @@ import graft.extract.Tables
 import graft.gen.TableGen
 import graft.oracle.PlainTables
 import graft.oracle.PlainTables.PFrag
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Table reconstruction: pinned grids, the adversarial shapes the
   * TableGen oracle deliberately avoids, engine-vs-naive-twin random
   * parity, and the Spark wrapper's shuffle-order insensitivity.
   */
-class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TablesSpec extends AnyFunSuite with SparkSuite {
 
   private def run(x0: Double, y0: Double, w: Double, h: Double,
                   text: String): Run = Run(1, x0, y0, x0 + w, y0 + h, text)

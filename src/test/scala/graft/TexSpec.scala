@@ -4,8 +4,6 @@ import graft.extract.TexExtractor
 import graft.extract.TexExtractor.{Block, Media}
 import graft.gen.TexGen
 import graft.sources.RawFiles
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -13,15 +11,7 @@ import java.nio.file.Files
   * math, environments, tabular TSV, accents) against TexGen's
   * hand-assembled ground truth, plus pins and the corruption storm.
   */
-class TexSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TexSpec extends AnyFunSuite with SparkSuite {
 
   private def tex(body: String): String =
     s"\\documentclass{article}\n\\begin{document}\n$body\n\\end{document}\n"

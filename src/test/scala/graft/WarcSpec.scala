@@ -3,8 +3,6 @@ package graft
 import graft.extract.WarcExtractor
 import graft.gen.WarcGen
 import graft.sources.RawFiles
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -14,15 +12,7 @@ import java.nio.file.Files
   * record = one InputDoc, routed by MIME through the existing front
   * ends, identical through the batch scan and the streaming decode.
   */
-class WarcSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class WarcSpec extends AnyFunSuite with SparkSuite {
 
   private val CRLF = "\r\n"
   private def b(s: String): Array[Byte] =

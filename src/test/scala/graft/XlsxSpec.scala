@@ -13,7 +13,7 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
   * parser — a different XML machine entirely (real parser vs hand
   * scanner), so agreement pins the spec, not the implementation.
   */
-class XlsxSpec extends AnyFunSuite {
+class XlsxSpec extends AnyFunSuite with SparkSuite {
 
   // ---------- xlsx builder (test-local, deterministic) ----------
 
@@ -292,28 +292,22 @@ class XlsxSpec extends AnyFunSuite {
   }
 
   test("ingest e2e: .xlsx files and a lying-extension .txt route to TSVs") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("xlsx-e2e")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", false).getOrCreate()
-    try {
-      val tmp = java.nio.file.Files.createTempDirectory("xlsx-e2e").toString
-      graft.gen.XlsxGen.write(tmp, 6)
-      // content magic: a workbook served with a .txt name still decodes
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(tmp, "mislabeled.txt"),
-        graft.gen.XlsxGen.fileBytes(3))
-      val rows = graft.sources.RawFiles.read(spark, tmp)
-        .collect().map(d => d.doc_id ->
-          d.spans.map(s => (s.kind, s.text, s.offset))).toMap
-      (0 until 6).foreach { i =>
-        val exp = graft.gen.XlsxGen.expectedSheets(i).zipWithIndex
-          .map { case ((_, tsv), k) => ("text", tsv, k) }
-        assert(rows(graft.gen.XlsxGen.fileName(i)) == exp, s"doc $i")
-      }
-      assert(rows("mislabeled.txt") ==
-        graft.gen.XlsxGen.expectedSheets(3).zipWithIndex
-          .map { case ((_, tsv), k) => ("text", tsv, k) })
-    } finally spark.stop()
+    val tmp = java.nio.file.Files.createTempDirectory("xlsx-e2e").toString
+    graft.gen.XlsxGen.write(tmp, 6)
+    // content magic: a workbook served with a .txt name still decodes
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(tmp, "mislabeled.txt"),
+      graft.gen.XlsxGen.fileBytes(3))
+    val rows = graft.sources.RawFiles.read(spark, tmp)
+      .collect().map(d => d.doc_id ->
+        d.spans.map(s => (s.kind, s.text, s.offset))).toMap
+    (0 until 6).foreach { i =>
+      val exp = graft.gen.XlsxGen.expectedSheets(i).zipWithIndex
+        .map { case ((_, tsv), k) => ("text", tsv, k) }
+      assert(rows(graft.gen.XlsxGen.fileName(i)) == exp, s"doc $i")
+    }
+    assert(rows("mislabeled.txt") ==
+      graft.gen.XlsxGen.expectedSheets(3).zipWithIndex
+        .map { case ((_, tsv), k) => ("text", tsv, k) })
   }
 }
