@@ -60,13 +60,12 @@ object ArchiveExtractor {
     bytes.length >= 4 && bytes(0) == 'P' && bytes(1) == 'K' &&
       bytes(2) == 3 && bytes(3) == 4
 
-  /** Zip magic AND not claimed by an OOXML/EPUB front end — those are
-    * zips whose decode belongs to their own extractor.
+  /** Zip magic AND claimed by no front end's content sniff — an
+    * OOXML/EPUB/ODF package is a zip whose decode belongs to its own
+    * extractor ([[FrontEnds.sniff]]).
     */
   def isPlainZip(bytes: Array[Byte]): Boolean =
-    isZip(bytes) && !DocxExtractor.isDocx(bytes) &&
-      !XlsxExtractor.isXlsx(bytes) && !PptxExtractor.isPptx(bytes) &&
-      !EpubExtractor.isEpub(bytes) && !OdtExtractor.isOdt(bytes)
+    isZip(bytes) && FrontEnds.sniff(bytes).isEmpty
 
   /** `ustar` magic at +257 (POSIX), or a v7-style header: printable
     * NUL-terminated name + valid octal size + plausible checksum field.

@@ -60,12 +60,6 @@ package graft.extract
   */
 object DocExtractor {
 
-  sealed trait Item
-  final case class Text(t: String) extends Item
-  /** kind is always "image" (Word inline pictures are raster BLIPs;
-    * sounds/OLE objects never pair with a stored bitmap). */
-  final case class Media(kind: String, ref: String) extends Item
-
   private def u16(b: Array[Byte], off: Int): Int =
     if (off < 0 || off + 2 > b.length) -1
     else (b(off) & 0xFF) | ((b(off + 1) & 0xFF) << 8)
@@ -338,7 +332,7 @@ object DocExtractor {
         case _ if c >= ' ' => sb.append(c)
         case 0x01 => // picture/OLE anchor: media at anchor position
           anchors += 1
-          blocks += Media("image", s"pic$anchors")
+          blocks += Media("image", s"pic$anchors", inFile = true)
         case _ => () // 0x02/0x05/0x08 anchors + stray controls
       }
       i += 1
@@ -365,7 +359,7 @@ object DocExtractor {
     lazy val nPics = Cfb.stream(b, "Data")
       .map(d => Blip.scan(d).length).getOrElse(0)
     its.filter {
-      case Media(_, ref) => ref.drop(3).toInt <= nPics
+      case Media(_, ref, _) => ref.drop(3).toInt <= nPics
       case _ => true
     }
   }

@@ -11,7 +11,7 @@ import scala.collection.mutable.ArrayBuffer
   * X8; /root/reference/setup.sql:44-45 suffix-filters `%.pdf`), but the
   * north rule's interleaved text+media documents cover office formats in
   * any web-scale corpus. Like the genuine-PDF path ([[RealPdf]] via
-  * [[graft.sources.RawFiles.docSpans]]), DOCX decodes AT THE INGEST
+  * [[FrontEnds]]), DOCX decodes AT THE INGEST
   * BOUNDARY into the spec's existing span vocabulary — paragraphs enter
   * as verbatim "text" spans, embedded images as by-reference media
   * spans — so [[graft.core.ExtractionSpec]] and both its independent
@@ -87,10 +87,6 @@ import scala.collection.mutable.ArrayBuffer
   * package-absolute).
   */
 object DocxExtractor {
-
-  sealed trait Item
-  final case class Text(text: String) extends Item
-  final case class Media(kind: String, ref: String) extends Item
 
   def isDocx(bytes: Array[Byte]): Boolean =
     bytes.length > 4 && bytes(0) == 'P' && bytes(1) == 'K' &&
@@ -217,7 +213,7 @@ object DocxExtractor {
                 (inPara || (tblDepth > 0 && inCell)) => appendText("\n")
             case "a:blip" if !closing =>
               attrOf(doc, lt, gt, "r:embed").flatMap(rels.get).foreach(t =>
-                out += Media(mediaKind(t), t))
+                out += Media(mediaKind(t), t, inFile = true))
             case _ => ()
           }
           i = gt + 1

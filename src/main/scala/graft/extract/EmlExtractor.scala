@@ -19,8 +19,8 @@ import scala.collection.mutable.ArrayBuffer
   *  - `image/…`, `audio/…`, `video/…` parts as by-reference media
   *    spans (`p<idx>:<name>` — decoded payloads recoverable via
   *    [[mediaPayload]], the byte-fetch half of the contract);
-  *  - document attachments (filename suffix in the ingest text-kind
-  *    family: pdf/docx/html/txt/md/…) surfaced to the caller so
+  *  - document attachments ([[FrontEnds.childKind]]: a text-kind
+  *    filename suffix, containers excluded) surfaced to the caller so
   *    [[graft.sources.RawFiles]] can FAN THEM OUT as their own
   *    InputDocs through the matching front ends — an email with an
   *    attached PDF yields the PDF's positioned spans, same as a WARC
@@ -50,10 +50,6 @@ import scala.collection.mutable.ArrayBuffer
   * pipeline never faces.
   */
 object EmlExtractor {
-
-  sealed trait Item
-  final case class Text(text: String) extends Item
-  final case class Media(kind: String, ref: String) extends Item
 
   /** A document attachment to fan out at ingest: `idx` is the leaf
     * part index (stable across re-parses), `body` the CTE-decoded
@@ -143,10 +139,10 @@ object EmlExtractor {
     val subject = decodeWords(headers.getOrElse("subject", ""))
 
     // cid → media ref for inline <img src="cid:…"> resolution
-    val cidMap: Map[String, (String, String)] = leaves.flatMap { l =>
+    val cidMap: Map[String, Media] = leaves.flatMap { l =>
       mediaKind(l.mime).flatMap { k =>
         val id = l.cid.stripPrefix("<").stripSuffix(">")
-        if (id.isEmpty) None else Some(id -> (k, mediaRef(l)))
+        if (id.isEmpty) None else Some(id -> media(k, mediaRef(l)))
       }
     }.toMap
 
@@ -158,25 +154,24 @@ object EmlExtractor {
     val atts = Vector.newBuilder[Attachment]
     val perLeaf: Vector[Vector[Item]] = leaves.map { l =>
       mediaKind(l.mime) match {
-        case Some(k) => Vector(Media(k, mediaRef(l)))
+        case Some(k) => Vector(media(k, mediaRef(l)))
         case None =>
           val isAttachment = l.disposition == "attachment" &&
             l.filename.nonEmpty
-          if (isAttachment && docSuffix(l.filename)) {
+          if (isAttachment && FrontEnds.childKind(l.filename).isDefined) {
             atts += Attachment(l.idx, l.filename, l.body)
             Vector.empty
           } else if (l.mime == "text/html") {
             HtmlExtractor.items(
                 CharsetSniff.decode(l.body, html = true, l.charset))
               .map {
-                case HtmlExtractor.Block(t) => Text(t)
-                case HtmlExtractor.Media(k, src) =>
+                case Media(k, src, _) =>
                   val id = src.stripPrefix("cid:")
                   if (src.startsWith("cid:") && cidMap.contains(id)) {
                     referenced += id
-                    val (mk, ref) = cidMap(id)
-                    Media(mk, ref)
-                  } else Media(k, src)
+                    cidMap(id)
+                  } else media(k, src)
+                case t => t
               }
           } else if (l.mime.startsWith("text/") || l.mime.isEmpty) {
             val t = CharsetSniff.decode(l.body, html = false, l.charset)
@@ -231,20 +226,13 @@ object EmlExtractor {
   private def mediaKind(mime: String): Option[String] =
     Seq("image", "audio", "video").find(k => mime.startsWith(k + "/"))
 
-  /** Does the filename's suffix belong to the ingest text-kind family
-    * (so the attachment can fan out through a front end)?
-    */
-  private def docSuffix(filename: String): Boolean = {
-    val lp = filename.toLowerCase
-    val dot = lp.lastIndexOf('.')
-    dot >= 0 && DocExts.contains(lp.substring(dot + 1))
-  }
+  private val External = "(?i)^(https?|data|cid):.*".r
 
-  // container kinds (warc/zip/tar/jsonl/eml) excluded: one fan-out
-  // level, the same rule archives apply to nested archives
-  private val DocExts = Set("pdf", "html", "htm", "txt", "text", "docx",
-    "md", "markdown", "epub", "xlsx", "pptx", "rtf", "odt", "ods",
-    "odp", "tex")
+  /** A part ref (`p<idx>:<name>`) is in the message; an http(s), data
+    * or unresolved cid src passes verbatim.
+    */
+  private def media(kind: String, ref: String): Media =
+    Media(kind, ref, !External.matches(ref))
 
   /** Depth-first leaf walk. multipart/alternative contributes ONE
     * branch; other multiparts contribute all parts in order; a leaf

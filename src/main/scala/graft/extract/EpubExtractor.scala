@@ -33,9 +33,9 @@ package graft.extract
   *    entry is absent, are skipped silently. No media-type filter:
   *    a non-XHTML spine item degrades through the HTML tokenizer
   *    (declared).
-  *  - Each chapter decodes via the BOM-tolerant UTF-8 rule
-  *    ([[graft.sources.RawFiles.decodeTextPayload]] semantics) and
-  *    runs through [[HtmlExtractor.items]]: Block → [[Text]];
+  *  - Each chapter decodes via [[CharsetSniff]] without transport
+  *    charset or meta prescan (BOM > strict UTF-8 > windows-1252) and
+  *    runs through [[HtmlExtractor.items]]: [[Text]] as is;
   *    Media(kind, src) → [[Media]] with ref = src resolved against the
   *    CHAPTER's directory (an in-archive path, fetchable via
   *    [[mediaPayload]]) — unless src carries a scheme
@@ -45,10 +45,6 @@ package graft.extract
   *    within each chapter.
   */
 object EpubExtractor {
-
-  sealed trait Item
-  final case class Text(text: String) extends Item
-  final case class Media(kind: String, ref: String) extends Item
 
   private val ContainerPath = "META-INF/container.xml"
 
@@ -108,9 +104,6 @@ object EpubExtractor {
       } finally z.close()
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
-  private def decodeChapter(b: Array[Byte]): String =
-    graft.sources.RawFiles.decodeTextPayload(b)
-
   private val SchemeRx = "(?i)^(https?|data):.*".r
 
   /** Parse one EPUB payload into its ordered item stream. Callers must
@@ -141,13 +134,12 @@ object EpubExtractor {
           val path = resolvePath(opfDir, href)
           entries.get(path).toVector.flatMap { chBytes =>
             val chDir = dirOf(path)
-            HtmlExtractor.items(decodeChapter(chBytes)).map {
-              case HtmlExtractor.Block(t) => Text(t)
-              case HtmlExtractor.Media(k, src) =>
-                val ref =
-                  if (SchemeRx.matches(src)) src
-                  else resolvePath(chDir, src)
-                Media(k, ref)
+            HtmlExtractor.items(
+                CharsetSniff.decode(chBytes, html = false)).map {
+              case Media(k, src, _) =>
+                Media.unlessScheme(k,
+                  if (SchemeRx.matches(src)) src else resolvePath(chDir, src))
+              case t => t
             }
           }
         }

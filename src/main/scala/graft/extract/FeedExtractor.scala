@@ -41,10 +41,6 @@ import scala.collection.mutable.ArrayBuffer
   */
 object FeedExtractor {
 
-  sealed trait Item
-  final case class Text(text: String) extends Item
-  final case class Media(kind: String, ref: String) extends Item
-
   final case class Entry(idx: Int, id: String, items: Vector[Item])
 
   /** Content magic: an rss/feed/rdf root element within the head
@@ -85,12 +81,8 @@ object FeedExtractor {
     bodyRaw.foreach { b =>
       if (b.indexOf('<') >= 0) {
         val sub = HtmlExtractor.items(b)
-        val blocks = sub.collect { case HtmlExtractor.Block(t) => t }
-        sub.foreach {
-          case HtmlExtractor.Block(t) => items += Text(t)
-          case HtmlExtractor.Media(k, src) => items += Media(k, src)
-        }
-        if (blocks.isEmpty) {
+        items ++= sub
+        if (!sub.exists(_.isInstanceOf[Text])) {
           // no block cleared the boilerpipe length gate — feed bodies
           // are main content by construction, so keep the stripped text
           val t = HtmlExtractor.normalize(stripTags(b))
@@ -102,18 +94,13 @@ object FeedExtractor {
       }
     }
     // RSS enclosures + media:content; Atom enclosure links
-    tagAttrs(seg, "enclosure").foreach { at =>
-      at.get("url").filter(_.nonEmpty).foreach(u =>
-        items += Media(mediaKind(at.getOrElse("type", ""), u), u))
-    }
-    tagAttrs(seg, "media:content").foreach { at =>
-      at.get("url").filter(_.nonEmpty).foreach(u =>
-        items += Media(mediaKind(at.getOrElse("type", ""), u), u))
-    }
+    def enclosure(at: Map[String, String], key: String): Unit =
+      at.get(key).filter(_.nonEmpty).foreach(u => items +=
+        Media(mediaKind(at.getOrElse("type", ""), u), u, inFile = false))
+    tagAttrs(seg, "enclosure").foreach(enclosure(_, "url"))
+    tagAttrs(seg, "media:content").foreach(enclosure(_, "url"))
     if (!rss) tagAttrs(seg, "link").foreach { at =>
-      if (at.get("rel").contains("enclosure"))
-        at.get("href").filter(_.nonEmpty).foreach(u =>
-          items += Media(mediaKind(at.getOrElse("type", ""), u), u))
+      if (at.get("rel").contains("enclosure")) enclosure(at, "href")
     }
     val its = items.result()
     if (its.isEmpty) None

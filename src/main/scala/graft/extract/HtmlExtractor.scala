@@ -85,17 +85,6 @@ import scala.collection.mutable.ArrayBuffer
   */
 object HtmlExtractor {
 
-  /** One extracted item, in document order. */
-  sealed trait Item
-  /** A retained main-content block's normalized text. */
-  final case class Block(text: String) extends Item
-  /** A visible media occurrence: kind ∈ image/video/audio, ref = the
-    * entity-decoded src attribute (media-by-reference — the north
-    * rule's interleaved text+media invariant, format-symmetric with
-    * the PDF embedded-image path, [[graft.sources.RawFiles.docSpans]]).
-    */
-  final case class Media(kind: String, ref: String) extends Item
-
   val BlockTags: Set[String] = Set(
     "p", "div", "h1", "h2", "h3", "h4", "h5", "h6", "li", "td", "th", "tr",
     "table", "ul", "ol", "article", "section", "main", "title",
@@ -128,8 +117,13 @@ object HtmlExtractor {
 
   /** Kept text blocks only (media items dropped) — the text view. */
   def extract(html: String): Vector[String] =
-    items(html).collect { case Block(t) => t }
+    items(html).collect { case Text(t) => t }
 
+  /** Kept blocks as [[Text]] and visible media as external [[Media]]
+    * (kind ∈ image/video/audio, ref = the entity-decoded src — media by
+    * reference, format-symmetric with the PDF embedded-image path of
+    * [[FrontEnds]]), interleaved in document order.
+    */
   def items(html: String): Vector[Item] = {
     if (html == null) return Vector.empty
     val out = Vector.newBuilder[Item]
@@ -151,7 +145,7 @@ object HtmlExtractor {
     def flush(): Unit = {
       val norm = normalize(buf.toString)
       if (!boilerMarked && norm.length >= MinBlockLen &&
-          linkChars * 3 <= contentChars) out += Block(norm)
+          linkChars * 3 <= contentChars) out += Text(norm)
       buf.setLength(0); contentChars = 0; linkChars = 0; boilerMarked = false
     }
 
@@ -225,7 +219,7 @@ object HtmlExtractor {
                 val kind = mediaKind(name)
                 if (kind != null) mediaRefOf(html, nameEnd, gt).foreach { raw =>
                   val ref = decodeEntities(raw)
-                  if (ref.nonEmpty) out += Media(kind, ref)
+                  if (ref.nonEmpty) out += Media(kind, ref, inFile = false)
                 }
               }
               if (name == "video" || name == "audio") {

@@ -44,13 +44,6 @@ import com.fasterxml.jackson.databind.JsonNode
   */
 object IpynbExtractor {
 
-  sealed trait Item
-  final case class Text(t: String) extends Item
-  /** `inFile` media refs (`att<cell>:<name>` / `out<cell>:<idx>`)
-    * resolve via [[mediaPayload]]; external refs pass verbatim. */
-  final case class Media(kind: String, ref: String, inFile: Boolean)
-      extends Item
-
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   private val ImageMimes = Seq("image/png", "image/jpeg", "image/gif")
@@ -105,14 +98,13 @@ object IpynbExtractor {
   private def markdownItems(c: JsonNode, ci: Int): Vector[Item] = {
     val atts = c.get("attachments")
     MdExtractor.items(joined(c.get("source"))).flatMap {
-      case MdExtractor.Block(t) => Some(Text(t))
-      case MdExtractor.Media(mk, ref) if ref.startsWith("attachment:") =>
+      case Media(_, ref, _) if ref.startsWith("attachment:") =>
         val name = ref.stripPrefix("attachment:")
         val resolvable = atts != null && atts.has(name) &&
           ImageMimes.exists(m => atts.get(name).has(m))
         if (resolvable) Some(Media("image", s"att$ci:$name", inFile = true))
         else None // ghost ref: never mint an unresolvable media span
-      case MdExtractor.Media(mk, ref) => Some(Media(mk, ref, inFile = false))
+      case it => Some(it) // text, and external refs verbatim
     }
   }
 

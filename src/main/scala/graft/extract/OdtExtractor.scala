@@ -43,10 +43,6 @@ import scala.collection.mutable.ArrayBuffer
   */
 object OdtExtractor {
 
-  sealed trait Item
-  final case class Text(text: String) extends Item
-  final case class Media(kind: String, ref: String) extends Item
-
   /** The whole ODF document family: text (.odt), spreadsheet (.ods —
     * every sheet is a top-level `table:table`, so the same walk emits
     * one TSV span per non-empty sheet, the XLSX semantics), and
@@ -182,7 +178,8 @@ object OdtExtractor {
                 href =>
                   val ref = if (href.startsWith("./")) href.substring(2)
                             else href
-                  if (ref.nonEmpty) out += Media(mediaKind(ref), ref)
+                  if (ref.nonEmpty)
+                    out += Media.unlessScheme(mediaKind(ref), ref)
               }
             case _ => ()
           }

@@ -39,12 +39,6 @@ package graft.extract
   */
 object PptExtractor {
 
-  sealed trait Item
-  final case class Text(t: String) extends Item
-  /** kind is always "image" (PPT BLIPs are raster/vector pictures;
-    * sounds/videos live behind ExOleObj links, out of scope). */
-  final case class Media(kind: String, ref: String) extends Item
-
   private def u16(b: Array[Byte], off: Int): Int =
     if (off < 0 || off + 2 > b.length) -1
     else (b(off) & 0xFF) | ((b(off + 1) & 0xFF) << 8)
@@ -127,7 +121,7 @@ object PptExtractor {
           .map(_.replace('\u000B', '\n'))
           .map(_.trim).filter(_.nonEmpty)
           .map(Text.apply)
-      case EvPic(pib) => Vector(Media("image", s"pic$pib"))
+      case EvPic(pib) => Vector(Media("image", s"pic$pib", inFile = true))
       case EvEnc => Vector.empty
     }
   }

@@ -70,10 +70,6 @@ import scala.collection.mutable.ArrayBuffer
   */
 object PptxExtractor {
 
-  sealed trait Item
-  final case class Text(text: String) extends Item
-  final case class Media(kind: String, ref: String) extends Item
-
   private val PresPath = "ppt/presentation.xml"
   private val PresRels = "ppt/_rels/presentation.xml.rels"
 
@@ -283,7 +279,7 @@ object PptxExtractor {
                     if (t.matches("(?i)^(https?|data):.*")) t
                     else normalizePath(
                       if (t.startsWith("/")) t.substring(1) else dir + t)
-                  out += Media(mediaKind(t), ref)
+                  out += Media.unlessScheme(mediaKind(t), ref)
                 }
             case _ => ()
           }

@@ -71,10 +71,6 @@ import scala.collection.mutable.ArrayBuffer
   */
 object RtfExtractor {
 
-  sealed trait Item
-  final case class Text(text: String) extends Item
-  final case class Media(kind: String, ref: String) extends Item
-
   def isRtf(bytes: Array[Byte]): Boolean =
     bytes.length >= 5 && bytes(0) == '{' && bytes(1) == '\\' &&
       bytes(2) == 'r' && bytes(3) == 't' && bytes(4) == 'f'
@@ -153,7 +149,7 @@ object RtfExtractor {
       if (data.nonEmpty) {
         flushTable() // a picture after table rows keeps source order
         val ext = if (pictExt != null) pictExt else "bin"
-        out += Media("image", s"pict_${picts.length}.$ext")
+        out += Media("image", s"pict_${picts.length}.$ext", inFile = true)
         picts += data
       }
       pictHex = null; pictBin = null; pictExt = null

@@ -31,7 +31,7 @@ package graft.extract
   *     captions re-emit the same line shifted one row — the standard
   *     de-rollup for caption corpora).
   *
-  * Charset: callers hand decoded text ([[graft.sources.RawFiles]] runs
+  * Charset: callers hand decoded text ([[FrontEnds]] runs
   * the CharsetSniff chain first — srt files from the DVD era are
   * routinely windows-1252).
   */
@@ -66,6 +66,15 @@ object SubtitleExtractor {
     val lines = t.linesIterator.filter(_.trim.nonEmpty).take(2).toSeq
     lines.sizeIs == 2 && lines.head.trim.matches("\\d{1,6}") &&
       isTiming(lines(1))
+  }
+
+  /** Content magic on raw bytes: [[isVtt]] or [[isSrt]] over the
+    * first 512 bytes read as UTF-8.
+    */
+  def isSubs(bytes: Array[Byte]): Boolean = {
+    val head = new String(bytes, 0, math.min(bytes.length, 512),
+      java.nio.charset.StandardCharsets.UTF_8)
+    isVtt(head) || isSrt(head)
   }
 
   private def cleanLine(raw: String): String =

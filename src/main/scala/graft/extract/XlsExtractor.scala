@@ -98,11 +98,6 @@ object XlsExtractor {
     } catch { case _: Exception => Vector.empty }
   }
 
-  sealed trait Item
-  final case class Text(t: String) extends Item
-  /** kind is always "image" (sheet pictures are raster/vector BLIPs). */
-  final case class Media(kind: String, ref: String) extends Item
-
   /** The workbook as ordered items: per worksheet, its used-range TSV
     * (non-blank sheets only) followed by the sheet's embedded pictures
     * in drawing order — one [[Media]] per OfficeArtFOPT `pib`
@@ -127,7 +122,7 @@ object XlsExtractor {
               else Vector.empty
             head ++ sheetPibs(wb, at)
               .filter(pib => pib >= 1 && pib <= nPics)
-              .map(pib => Media("image", s"pic$pib"))
+              .map(pib => Media("image", s"pic$pib", inFile = true))
           }.flatten
       }
     } catch { case _: Exception => Vector.empty }

@@ -11,8 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native k-permutation MinHash signature over w-word shingles as a
   * Catalyst [[Expression]] with real `doGenCode` — one pass per row, no
   * per-shingle string allocation. Bit-identical to the composed-column
-  * formulation [[graft.ops.Dedup.minhashSignatureComposed]] (pinned by
-  * OpsSpec) and to the plain twin `PlainOracles.minhashSig`:
+  * formulation `ComposedForms.minhashSignatureComposed` (test-side,
+  * pinned by OpsSpec) and to the plain twin `PlainOracles.minhashSig`:
   * `xxhash64(shingle, j)` folds its children as
   * `hashInt(j, hashUTF8String(shingle, 42))`, so each shingle's string
   * hash is computed ONCE here and the k permutation values are cheap

@@ -245,23 +245,11 @@ object Dedup {
   /** k-permutation MinHash signature over word shingles, as an array
     * column: sig[j] = min over shingles of xxhash64(shingle, seed_j).
     * Native codegen'd expression ([[graft.functions.MinHashSig]]) — the
-    * composed form below pins its semantics in OpsSpec.
+    * test-side composed form (ComposedForms) pins its semantics in
+    * OpsSpec.
     */
   def minhashSignature(text: Column, w: Int, k: Int): Column =
     graft.functions.MinHashSig.minhashSig(text, w, k)
-
-  /** Pure-Catalyst composed formulation (transform + array_min over the
-    * shingle array) — semantic twin of the native expression, kept as
-    * the in-engine reference it is tested against. O(k x shingles)
-    * string re-hashes per row: do not use on a hot path.
-    */
-  private[graft] def minhashSignatureComposed(text: Column, w: Int,
-                                              k: Int): Column = {
-    val shingles = wordShingles(text, w)
-    val sig = transform(sequence(lit(0), lit(k - 1)), j =>
-      array_min(transform(shingles, s => xxhash64(s, j))))
-    when(size(shingles) > 0, sig).otherwise(null)
-  }
 
   /** MinHash LSH candidate pairs: split the k-long signature into `bands`
     * bands of k/bands rows; docs sharing any band hash are candidates.
@@ -413,20 +401,6 @@ object Dedup {
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.VecKernels.cosineSim(a, b)
-
-  /** The pre-r06 composed form, kept as the in-engine semantic
-    * reference the native kernel is tested against (OpsSpec parity).
-    * O(dim) interpreted lambda evaluations per row: not a hot path.
-    */
-  private[graft] def cosineComposed(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y),
-      lit(0.0), (s, v) => s + v)
-    val na = sqrt(aggregate(transform(a, x => x * x),
-      lit(0.0), (s, v) => s + v))
-    val nb = sqrt(aggregate(transform(b, x => x * x),
-      lit(0.0), (s, v) => s + v))
-    dot / (na * nb)
-  }
 
   /** Embedding near-dup pairs with cosine >= minSim, bucketed by random
     * hyperplane LSH (`nPlanes` sign bits from deterministic hash-based

@@ -19,25 +19,6 @@ object Similarity {
   def hyperplaneSketch(vec: Column, nPlanes: Int): Column =
     graft.functions.VecKernels.hyperplaneSketchCol(vec, nPlanes)
 
-  /** The pre-r06 composed form — the in-engine semantic reference the
-    * native kernel is parity-tested against (OpsSpec); interpreted HOF
-    * evaluation, not a hot path.
-    */
-  private[graft] def hyperplaneSketchComposed(vec: Column,
-                                              nPlanes: Int): Column =
-    aggregate(
-      transform(sequence(lit(0), lit(nPlanes - 1)), p => {
-        val dotp = aggregate(
-          zip_with(vec, sequence(lit(0), size(vec) - 1), (x, i) => {
-            val h = xxhash64(p * 131071 + i.cast("long"))
-            x.cast("double") *
-              ((pmod(h, lit(1024L)).cast("double") / 1024.0) - 0.5)
-          }),
-          lit(0.0), (s, v) => s + v)
-        when(dotp > 0, call_function("shiftleft", lit(1L), p)).otherwise(0L)
-      }),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
-
   /** Deterministic text→vector embedder (feature-hashing projection,
     * [[graft.functions.TextEmbed]]): search and embedding-dedup compose
     * from raw text without a precomputed vectors table — the public
@@ -95,28 +76,6 @@ object Similarity {
     */
   def codeCosine(a: Column, b: Column): Column =
     graft.functions.VecKernels.codeCosineCol(a, b)
-
-  /** Pre-r06 composed int8 forms — semantic references for the OpsSpec
-    * parity tests of the native kernels.
-    */
-  private[graft] def int8ScaleComposed(vec: Column): Column =
-    greatest(
-      aggregate(transform(vec.cast("array<double>"), x => abs(x)),
-        lit(0.0), (s, x) => greatest(s, x)) / 127.0, lit(1e-30))
-
-  private[graft] def int8CodesComposed(vec: Column, scale: Column): Column =
-    transform(vec.cast("array<double>"), x => greatest(lit(-127),
-      least(lit(127), round(x / scale, 0).cast("int"))))
-
-  private[graft] def codeCosineComposed(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y),
-      lit(0.0), (s, v) => s + v)
-    val na = sqrt(aggregate(transform(a, x => x * x),
-      lit(0.0), (s, v) => s + v))
-    val nb = sqrt(aggregate(transform(b, x => x * x),
-      lit(0.0), (s, v) => s + v))
-    dot / (na * nb)
-  }
 
   // ---------- product quantization (PQ) ----------
 
@@ -182,31 +141,10 @@ object Similarity {
     // composed form evaluated m·ksub interpreted zip_with/aggregate
     // lambdas per row; arithmetic (normalize → per-subspace first-min
     // squared L2) is replicated op-for-op — OpsSpec pins parity against
-    // [[pqEncodeComposed]]
+    // the composed form (test-side ComposedForms.pqEncodeComposed)
     df.select(col(idCol),
       graft.functions.VecKernels.pqCodesCol(col(vecCol), books)
         .as("codes"))
-
-  /** Pre-r06 composed PQ encode — the OpsSpec parity reference. */
-  private[graft] def pqEncodeComposed(df: DataFrame, idCol: String,
-      vecCol: String, books: Array[Array[Array[Double]]]): DataFrame = {
-    val m = books.length
-    val dsub = books(0)(0).length
-    val normed = df
-      .select(col(idCol), col(vecCol), l2Norm(col(vecCol)).as("nrm"))
-      .select(col(idCol),
-        l2NormalizeWith(col(vecCol), col("nrm")).as("nv"))
-    val codeCols = (0 until m).map { j =>
-      val bookLit = array(books(j).map(cw =>
-        array(cw.map(lit(_)): _*)): _*)
-      val sub = slice(col("nv"), j * dsub + 1, dsub)
-      val dists = transform(bookLit, c =>
-        aggregate(zip_with(sub, c, (x, y) => (x - y) * (x - y)),
-          lit(0.0), (s, v) => s + v))
-      (array_position(dists, array_min(dists)) - 1).cast("int")
-    }
-    normed.select(col(idCol), array(codeCols: _*).as("codes"))
-  }
 
   /** ADC lookup table for one query: lut(j)(c) = dot(normalized query's
     * subvector j, codeword c) — m·ksub doubles computed once on the
@@ -233,14 +171,6 @@ object Similarity {
     */
   def pqAdcScore(codes: Column, lut: Array[Array[Double]]): Column =
     graft.functions.VecKernels.adcScoreCol(codes, lut)
-
-  /** Pre-r06 composed ADC score — the OpsSpec parity reference. */
-  private[graft] def pqAdcScoreComposed(codes: Column,
-                                        lut: Array[Array[Double]]): Column =
-    lut.zipWithIndex.map { case (row, j) =>
-      element_at(array(row.map(lit(_)): _*),
-        element_at(codes, j + 1) + 1)
-    }.reduce(_ + _)
 
   /** Driver-side unit normalize, the same double arithmetic as the
     * Catalyst [[l2NormalizeWith]] path (ascending-index sum).
@@ -446,28 +376,11 @@ object Similarity {
     // composed form ran nCells interpreted HOF cosines per row; the
     // kernel replicates the double-product cosine, Double.compare
     // ordering and first-occurrence (lowest cell id) tie-break exactly
-    // (OpsSpec parity vs [[ivfAssignComposed]])
+    // (OpsSpec parity vs the test-side ComposedForms.ivfAssignComposed)
     val sorted = centroids.sortBy(_._1)
     df.select(col(idCol), col(vecCol),
       graft.functions.VecKernels.bestCellCol(col(vecCol),
         sorted.map(_._2.map(_.toDouble)), sorted.map(_._1)).as("cell_id"))
-  }
-
-  /** Pre-r06 composed IVF assignment — the OpsSpec parity reference. */
-  private[graft] def ivfAssignComposed(df: DataFrame, idCol: String,
-      vecCol: String, centroids: Array[(Long, Array[Float])]): DataFrame = {
-    val sorted = centroids.sortBy(_._1)
-    val centVecs = array(sorted.map { case (_, v) =>
-      array(v.map(x => lit(x.toDouble)): _*) }: _*)
-    val centIds = array(sorted.map { case (id, _) => lit(id) }: _*)
-    df.select(col(idCol), col(vecCol),
-        transform(centVecs,
-          c => Dedup.cosineComposed(col(vecCol).cast("array<double>"), c))
-          .as("sims"))
-      .withColumn("cell_id",
-        element_at(centIds,
-          array_position(col("sims"), array_max(col("sims"))).cast("int")))
-      .select(col(idCol), col(vecCol), col("cell_id"))
   }
 
   /** ANN top-k through the IVF index: probe the nProbe cells nearest to

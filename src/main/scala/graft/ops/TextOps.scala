@@ -183,33 +183,6 @@ object TextOps {
   def canonicalUrl(url: Column): Column =
     graft.functions.CanonicalUrl.canonicalUrl(url)
 
-  /** Pre-r06 composed five-regexp form — the in-engine reference the
-    * native [[graft.functions.CanonicalUrl]] is parity-tested against
-    * (OpsSpec); the independent oracle twin remains
-    * PlainOracles.canonicalUrlPlain.
-    */
-  private[graft] def canonicalUrlComposed(url: Column): Column = {
-    val noFrag = regexp_replace(url, "#.*$", "")
-    val prefix =
-      regexp_extract(noFrag, "^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)", 1)
-    val lowered = when(length(prefix) === 0, noFrag)
-      .otherwise(concat(lower(prefix),
-        noFrag.substr(length(prefix) + lit(1), length(noFrag))))
-    val noPort = regexp_replace(
-      regexp_replace(lowered, "^(http://[^/?#]*):80([/?#]|$)", "$1$2"),
-      "^(https://[^/?#]*):443([/?#]|$)", "$1$2")
-    val qpos = instr(noPort, "?")
-    val base = when(qpos === 0, noPort)
-      .otherwise(noPort.substr(lit(1), qpos - 1))
-    val query = noPort.substr(qpos + 1, length(noPort))
-    val kept = filter(split(query, "&"), x =>
-      !x.rlike("^(utm_[a-z0-9_]*|gclid|fbclid|mc_cid|mc_eid|ref)="))
-    val joined = array_join(kept, "&")
-    val rebuilt = when(qpos === 0 || joined === "", base)
-      .otherwise(concat(base, lit("?"), joined))
-    regexp_replace(rebuilt, "/$", "")
-  }
-
   /** Mean token length over whitespace tokens. */
   def meanTokenLen(text: Column): Column =
     (length(text) - (tokenCount(text) - 1)).cast("double") /
@@ -244,24 +217,6 @@ object TextOps {
     */
   def langIdGuess(text: Column): Column =
     graft.functions.LangGuess.langGuess(text)
-
-  /** Pre-r06 composed rlike/contains cascade — the in-engine reference
-    * the native [[graft.functions.LangGuess]] is parity-tested against
-    * (OpsSpec); the DuckDB twin runs the same cascade in SQL.
-    */
-  private[graft] def langIdGuessComposed(text: Column): Column = {
-    val padded = concat(lit(" "), lower(text), lit(" "))
-    when(text.rlike("[\\u4e00-\\u9fff]"), "zh")
-      .when(text.rlike("[\\u3040-\\u30ff]"), "ja")
-      .when(text.rlike("[\\u0400-\\u04ff]"), "ru")
-      .when(padded.contains(" el ") || padded.contains(" los ") ||
-            padded.contains(" una "), "es")
-      .when(padded.contains(" der ") || padded.contains(" und ") ||
-            padded.contains(" ist "), "de")
-      .when(padded.contains(" le ") || padded.contains(" les ") ||
-            padded.contains(" une "), "fr")
-      .otherwise("en")
-  }
 
   /** 64-bit content fingerprints: xxhash64 (Spark-native) and a true
     * polynomial rolling hash (Rabin-Karp base 31 mod 2^64, native

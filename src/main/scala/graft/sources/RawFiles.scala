@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.core.{InputDoc, Span}
+import graft.extract.FrontEnds
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,72 +13,20 @@ import org.apache.spark.sql.functions._
   * all happen inside one scan, producing the engine's canonical
   * interleaved-spans shape `(doc_id, spans)`.
   *
-  * Kind classification by extension (reference: `LIKE '%.pdf'` plus the
-  * UI's validation list, streamlit_app.py:655-678):
-  *   .pdf → one "pdf" span (payload decoded as UTF-8 content stream;
-  *   genuine PDF bytes additionally yield one "image" media span per
-  *   embedded-image occurrence — see [[docSpans]]);
-  *   .html/.htm → one "html" span; .txt/.text → one "text" span;
-  *   .md/.markdown → decoded at ingest by [[graft.extract.MdExtractor]]
-  *   into "text" spans (one per block) + media spans (one per image
-  *   reference, URL verbatim);
-  *   .epub → decoded at ingest by [[graft.extract.EpubExtractor]] into
-  *   spine-ordered "text" spans + media spans (in-archive refs);
-  *   .xlsx → decoded at ingest by [[graft.extract.XlsxExtractor]] into
-  *   one "text" span per non-empty worksheet holding its used-range TSV
-  *   (the engine's table vocabulary), in workbook order;
-  *   .pptx → decoded at ingest by [[graft.extract.PptxExtractor]] into
-  *   slide-ordered paragraph "text" spans + media spans (in-archive
-  *   refs);
-  *   .rtf → decoded at ingest by [[graft.extract.RtfExtractor]] into
-  *   paragraph "text" spans, TSV table blocks, and picture media spans;
-  *   .odt → decoded at ingest by [[graft.extract.OdtExtractor]] into
-  *   paragraph/heading "text" spans, TSV table blocks, and image media
-  *   spans (in-archive refs);
-  *   .tex/.latex → decoded at ingest by [[graft.extract.TexExtractor]]
-  *   (detex-style): heading/caption/paragraph/verbatim blocks and TSV
-  *   tabular grids as "text" spans, \includegraphics refs as media
-  *   spans (path verbatim — external reference, like markdown);
-  *   .eml → decoded at ingest by [[graft.extract.EmlExtractor]]:
-  *   subject + MIME body parts as "text" spans (html parts through the
-  *   boilerpipe gate, cid images resolved), media parts by reference,
-  *   and one EXTRA InputDoc per document attachment
-  *   (`<relpath>#a<idx>:<filename>`) routed through its front end;
-  *   .mbox → spool fan-out: one [[EmlExtractor]] expansion per member
-  *   message (`<relpath>#m<idx>`);
-  *   .rss/.atom (and feed-rooted .xml) → syndication fan-out by
-  *   [[graft.extract.FeedExtractor]]: one InputDoc per RSS item /
-  *   Atom entry (`<relpath>#e<idx>:<id>`), titles + unescaped html
-  *   bodies + enclosure media by reference; a NON-feed .xml decodes
-  *   as one generic-XML document via [[graft.extract.XmlExtractor]];
-  *   .warc/.warc.gz → EXPANDED at ingest by
-  *   [[graft.extract.WarcExtractor]]: each retained crawl record
-  *   becomes ITS OWN InputDoc (`<relpath>#r<idx>:<target-uri>`), its
-  *   payload routed by MIME through this very dispatch (an html record
-  *   is an html doc, a pdf record a pdf doc, an image record a media
-  *   doc by reference) — crawl archives are directories-of-documents
-  *   in one file;
-  *   .zip/.tar/.tar.gz/.tgz/.7z → EXPANDED at ingest by
-  *   [[graft.extract.ArchiveExtractor]]: one InputDoc per member file
-  *   (`<relpath>#<member>`), each routed by its own suffix (nested
-  *   archives drop — one fan-out level);
-  *   .jsonl/.ndjson → one InputDoc per retained JSON line
-  *   ([[graft.extract.JsonlExtractor]] —
-  *   `<relpath>#L<lineNo>:<record-id>`), the corpus-shard
-  *   re-ingestion path;
-  *   .json → whole-file JSON: a retained single object IS the doc
-  *   (`<relpath>`), an HF-style array fans out per retained element
-  *   (`<relpath>#r<idx>:<record-id>`); notebook-shaped payloads
-  *   reroute to the ipynb front end by content magic;
-  *   other `.gz` / `.zst` / `.xz` / `.bz2` / `.lz4` / `.sz` /
-  *   `.snappy` → inflated
-  *   ([[graft.extract.Codecs]]) and routed by the inner extension
-  *   (`page.html.gz` is an html doc, `shard.jsonl.zst` a Dolma-style
-  *   shard, `seg.warc.zst` a crawl segment);
-  *   image/audio/video extensions → one media span passing the file
-  *   path through as media_ref (bytes stay in the store — the north
-  *   rule's media-by-reference semantics); anything else is dropped,
-  *   like the reference's suffix filter.
+  * Routing is one table, [[graft.extract.FrontEnds]]: suffix → kind
+  * (the reference's `LIKE '%.pdf'` plus the UI's validation list,
+  * streamlit_app.py:655-678), the one content sniff that overrides a
+  * misnamed suffix, one decode and one media byte-fetch per front end,
+  * and the child-document rule. Media suffixes pass by reference (the
+  * file path is the media_ref; bytes stay in the store); anything else
+  * drops, like the reference's suffix filter. Containers fan out here,
+  * one InputDoc per unit: WARC records (`<rel>#r<idx>:<target-uri>`),
+  * archive members (`<rel>#<member>`), jsonl lines
+  * (`<rel>#L<line>:<id>`), whole-file JSON array elements
+  * (`<rel>#r<idx>:<id>`), feed entries (`<rel>#e<idx>:<id>`), mbox
+  * messages (`<rel>#m<idx>`), and email/PDF attachments
+  * (`<rel>#a<idx>:<filename>`); `.gz`/`.zst`/`.xz`/`.bz2`/`.lz4`/
+  * `.sz`/`.snappy` inflate and route by the inner suffix.
   *
   * Every text decode goes through the [[graft.extract.CharsetSniff]]
   * WHATWG chain (BOM > transport charset > HTML meta prescan > strict
@@ -92,39 +41,6 @@ import org.apache.spark.sql.functions._
   */
 object RawFiles {
 
-  private val TextExt: Map[String, String] = Map(
-    "pdf" -> "pdf", "html" -> "html", "htm" -> "html",
-    "txt" -> "text", "text" -> "text", "docx" -> "docx",
-    "md" -> "md", "markdown" -> "md", "epub" -> "epub",
-    "xlsx" -> "xlsx", "pptx" -> "pptx", "rtf" -> "rtf", "odt" -> "odt",
-    "doc" -> "doc", "dot" -> "doc", "xls" -> "xls", "xlt" -> "xls",
-    "ppt" -> "ppt", "pps" -> "ppt", "pot" -> "ppt",
-    // macro/template OOXML variants share the package structure
-    "docm" -> "docx", "dotx" -> "docx", "dotm" -> "docx",
-    "xlsm" -> "xlsx", "xltx" -> "xlsx",
-    "pptm" -> "pptx", "ppsx" -> "pptx", "potx" -> "pptx",
-    "ods" -> "odt", "odp" -> "odt",
-    "tex" -> "tex", "latex" -> "tex", "srt" -> "subs", "vtt" -> "subs",
-    "csv" -> "csv", "tsv" -> "csv",
-    "warc" -> "warc", "zip" -> "zip", "tar" -> "tar", "tgz" -> "tar",
-    "7z" -> "zip", // archive-dump dispatch; ArchiveExtractor routes by magic
-    "jsonl" -> "jsonl", "ndjson" -> "jsonl", "ipynb" -> "ipynb",
-    "json" -> "json",
-    "eml" -> "eml", "mbox" -> "mbox",
-    "rss" -> "feed", "atom" -> "feed", "xml" -> "xml")
-
-  private val MediaExt: Map[String, String] = Map(
-    "png" -> "image", "jpg" -> "image", "jpeg" -> "image", "gif" -> "image",
-    "webp" -> "image", "tiff" -> "image", "tif" -> "image",
-    "bmp" -> "image", "avif" -> "image", "ico" -> "image",
-    "svg" -> "image", // vector decoration: media by reference, not text
-    "mp3" -> "audio", "wav" -> "audio", "flac" -> "audio",
-    "ogg" -> "audio", "m4a" -> "audio", "aac" -> "audio",
-    "opus" -> "audio",
-    "mp4" -> "video", "mkv" -> "video", "webm" -> "video",
-    "avi" -> "video", "mov" -> "video", "m4v" -> "video",
-    "mpg" -> "video", "mpeg" -> "video")
-
   /** Path relative to the scan root by plain substring search — NO regex
     * (a user dir with regex metacharacters must not crash or corrupt
     * ids), scheme-agnostic (file:/, hdfs://, s3a:// URIs all contain the
@@ -135,33 +51,12 @@ object RawFiles {
     if (i >= 0) uriPath.substring(i + root.length) else uriPath
   }
 
-  /** Payload decode for one text-kind file as the full span sequence:
-    * genuine PDFs (binary, %PDF- magic) go through the byte-level
-    * [[graft.extract.RealPdf]] front end, re-entering as ONE "pdf" span
-    * holding the canonical PG/TX interchange payload PLUS one media
-    * span per embedded-image occurrence (kind "image", media_ref
-    * `<path>#img<seq>:obj<N>`, or `…:inline` for BI…EI inline images —
-    * the bytes stay inside the stored file, XObject payloads
-    * recoverable via `RealPdf.imageBytes(bytes, N)`; offsets 1..k in
-    * content-stream order, so [[graft.core.ExtractionSpec]]'s offset
-    * ordering reproduces the document's own text→media sequence).
-    * Genuine DOCX (zip magic + `word/document.xml`) decodes through
-    * [[graft.extract.DocxExtractor]] into the spec's EXISTING
-    * vocabulary — one verbatim "text" span per paragraph plus one
-    * media span per embedded blip (media_ref `<path>#<relsTarget>`,
-    * payloads recoverable via [[docxMediaPayload]]), offsets in
-    * document order — so [[graft.core.ExtractionSpec]] needs no new
-    * kind. Everything else decodes as a single UTF-8 span (a
-    * non-archive `.docx` falls back to a "text" span — "docx" is an
-    * ingest classification, never a span kind). ONE definition shared
-    * by the batch directory reader and the streaming source, so the
-    * two ingestion paths cannot drift.
-    */
-  /** File-level decode with WARC fan-out: a `.warc`/`.warc.gz` file
-    * (by suffix OR content magic — a crawler's misnamed `.txt` WARC
-    * still routes) expands into one InputDoc PER retained record; every
-    * other kind stays one file = one InputDoc via [[docSpans]]. The one
-    * definition shared by the batch scan and the streaming source.
+  /** File-level decode with container fan-out: a WARC (by suffix OR
+    * content magic — a crawler's misnamed `.txt` WARC still routes)
+    * expands into one InputDoc PER retained record, an archive per
+    * member, and so on; every other kind stays one file = one InputDoc
+    * via [[graft.extract.FrontEnds.decode]]. The one definition shared
+    * by the batch scan and the streaming source.
     */
   private[graft] def docsOf(kind: String, path: String, bytes: Array[Byte],
                             root: String): Seq[InputDoc] =
@@ -181,10 +76,8 @@ object RawFiles {
       // pair parsed every payload twice, and a notebook three times)
       graft.extract.JsonlExtractor.routeJson(bytes) match {
         case Right(recs) => jsonDocs(relativize(path, root), recs)
-        case Left(_) =>
-          val spans = docSpans("ipynb", path, bytes)
-          if (spans.isEmpty) Nil
-          else Seq(InputDoc(relativize(path, root), spans))
+        case Left(_) => nonEmptyDoc(relativize(path, root),
+          FrontEnds.decode("ipynb", path, bytes)).toSeq
       }
     else if (kind == "feed" ||
              (kind == "xml" && graft.extract.FeedExtractor.isFeed(bytes)))
@@ -194,49 +87,44 @@ object RawFiles {
     else if (kind == "eml" || ((kind == "text" || kind == "mbox") &&
              graft.extract.EmlExtractor.isEml(bytes)))
       emlDocs(path, relativize(path, root), bytes)
-    else if (kind == "gz" || kind == "zst" || kind == "xz" ||
-             kind == "bz2" || kind == "lz4" || kind == "sz" ||
-             kind == "snappy") compressedDoc(path, bytes, root, kind)
+    else if (Compressed(kind)) compressedDoc(path, bytes, root, kind)
     else if (graft.extract.RealPdf.isPdf(bytes))
       pdfDocs(path, relativize(path, root), bytes)
-    else {
-      // a file with nothing extractable vanishes — the same posture as
-      // the pdf/eml/archive paths (apparatus-only XML, blank text, …)
-      val spans = docSpans(kind, path, bytes)
-      if (spans.isEmpty) Nil
-      else Seq(InputDoc(relativize(path, root), spans))
-    }
+    else nonEmptyDoc(relativize(path, root),
+      FrontEnds.decode(kind, path, bytes)).toSeq
+
+  /** A document with nothing extractable vanishes (apparatus-only XML,
+    * blank text, …) — at every level, files and container units alike.
+    */
+  private def nonEmptyDoc(id: String, spans: Vector[Span]): Option[InputDoc] =
+    if (spans.isEmpty) None else Some(InputDoc(id, spans))
+
+  /** Single-file compression suffixes ([[graft.extract.Codecs]]). */
+  private val Compressed = Set("gz", "zst", "xz", "bz2", "lz4", "sz", "snappy")
+
+  /** A child document — archive member, email attachment or PDF
+    * embedded file — as `<rel>#<tag>`, routed by the one child-document
+    * rule ([[graft.extract.FrontEnds.childKind]]); its in-file media
+    * refs live under `<path>#<tag>`.
+    */
+  private def childDoc(path: String, rel: String, tag: String,
+                       name: String, body: Array[Byte]): Option[InputDoc] =
+    FrontEnds.childKind(name).flatMap(k =>
+      nonEmptyDoc(s"$rel#$tag", FrontEnds.decode(k, s"$path#$tag", body)))
 
   /** One genuine PDF → its InputDocs: the document itself (positioned
-    * spans + embedded-image media via [[docSpans]]) plus one InputDoc
-    * per EMBEDDED FILE (`<rel>#a<idx>:<filename>`, ISO 32000 §7.11.4 —
-    * the /EmbeddedFiles name tree and /FileAttachment annotations)
-    * routed by its own suffix through the matching front end — a PDF
-    * carrying an attached CSV/DOCX/TXT yields those documents' spans,
-    * exactly like an email attachment or an archive member. Nested
-    * containers drop (one fan-out level), and a PDF reached through a
-    * WARC record, archive member, or email attachment does NOT fan out
-    * its own attachments — the same one-level rule.
+    * spans + embedded-image media) plus one InputDoc per EMBEDDED FILE
+    * (`<rel>#a<idx>:<filename>`, ISO 32000 §7.11.4 — the
+    * /EmbeddedFiles name tree and /FileAttachment annotations), a
+    * child document like an email attachment or an archive member. A
+    * PDF reached through a WARC record, archive member, or email
+    * attachment does NOT fan out its own attachments — one level.
     */
   private def pdfDocs(path: String, rel: String,
-                      bytes: Array[Byte]): Seq[InputDoc] = {
-    val main = docSpans("pdf", path, bytes)
-    val mainDoc = if (main.isEmpty) Nil else Seq(InputDoc(rel, main))
-    val attDocs = graft.extract.RealPdf.attachments(bytes).flatMap { a =>
-      val lp = a.name.toLowerCase
-      val dot = lp.lastIndexOf('.')
-      val e = if (dot < 0) "" else lp.substring(dot + 1)
-      TextExt.get(e).filterNot(k =>
-          k == "warc" || k == "zip" || k == "tar" || k == "jsonl" ||
-          k == "eml" || k == "mbox" || k == "feed")
-        .flatMap { k =>
-          val sp = docSpans(k, s"$path#a${a.idx}:${a.name}", a.body)
-          if (sp.isEmpty) None
-          else Some(InputDoc(s"$rel#a${a.idx}:${a.name}", sp))
-        }
-    }
-    mainDoc ++ attDocs
-  }
+                      bytes: Array[Byte]): Seq[InputDoc] =
+    nonEmptyDoc(rel, FrontEnds.decode("pdf", path, bytes)).toSeq ++
+      graft.extract.RealPdf.attachments(bytes).flatMap(a =>
+        childDoc(path, rel, s"a${a.idx}:${a.name}", a.name, a.body))
 
   /** One InputDoc per retained jsonl line
     * (`<relpath>#L<lineNo>:<record-id>`) — the shard re-ingestion path;
@@ -276,51 +164,23 @@ object RawFiles {
     */
   private def feedDocs(rel: String, bytes: Array[Byte]): Seq[InputDoc] =
     graft.extract.FeedExtractor.entries(bytes).map { e =>
-      InputDoc(s"$rel#e${e.idx}:${e.id}",
-        e.items.zipWithIndex.map {
-          case (graft.extract.FeedExtractor.Text(t), k) =>
-            Span("text", t, null, k)
-          case (graft.extract.FeedExtractor.Media(mk, ref), k) =>
-            Span(mk, null, ref, k)
-        }.toVector)
+      InputDoc(s"$rel#e${e.idx}:${e.id}", FrontEnds.spans(rel, e.items))
     }
 
   /** One email message → its InputDocs: the message body (Subject +
     * text parts + html parts through the boilerpipe gate + inline/
-    * attached media by reference, `p<idx>:<name>` tails resolvable via
-    * [[emlMediaPayload]]) as ONE InputDoc, plus one InputDoc per
-    * DOCUMENT attachment (`<rel>#a<idx>:<filename>`) routed by its
-    * own suffix through the matching front end — an email with an
-    * attached PDF yields the PDF's positioned spans, exactly like a
-    * WARC pdf record or an archive member. Nested containers
-    * (zip/warc/jsonl/eml attachments) drop: one fan-out level.
+    * attached media by reference, `p<idx>:<name>` tails) as ONE
+    * InputDoc, plus one child InputDoc per DOCUMENT attachment
+    * (`<rel>#a<idx>:<filename>`) — an email with an attached PDF yields
+    * the PDF's positioned spans, exactly like a WARC pdf record or an
+    * archive member.
     */
   private def emlDocs(path: String, rel: String,
                       bytes: Array[Byte]): Seq[InputDoc] = {
     val msg = graft.extract.EmlExtractor.parse(bytes)
-    val spans = msg.items.zipWithIndex.map {
-      case (graft.extract.EmlExtractor.Text(t), k) =>
-        Span("text", t, null, k)
-      case (graft.extract.EmlExtractor.Media(mk, ref), k) =>
-        val full = if (ref.matches("(?i)^(https?|data|cid):.*")) ref
-                   else s"$path#$ref"
-        Span(mk, null, full, k)
-    }.toVector
-    val main = if (spans.isEmpty) Nil else Seq(InputDoc(rel, spans))
-    val attDocs = msg.attachments.flatMap { a =>
-      val lp = a.filename.toLowerCase
-      val dot = lp.lastIndexOf('.')
-      val e = if (dot < 0) "" else lp.substring(dot + 1)
-      TextExt.get(e).filterNot(k =>
-          k == "warc" || k == "zip" || k == "tar" || k == "jsonl" ||
-          k == "eml" || k == "mbox")
-        .flatMap { k =>
-          val sp = docSpans(k, s"$path#a${a.idx}:${a.filename}", a.body)
-          if (sp.isEmpty) None
-          else Some(InputDoc(s"$rel#a${a.idx}:${a.filename}", sp))
-        }
-    }
-    main ++ attDocs
+    nonEmptyDoc(rel, FrontEnds.spans(path, msg.items)).toSeq ++
+      msg.attachments.flatMap(a =>
+        childDoc(path, rel, s"a${a.idx}:${a.filename}", a.filename, a.body))
   }
 
   /** mbox spool fan-out: one [[emlDocs]] expansion per member message
@@ -331,18 +191,6 @@ object RawFiles {
     graft.extract.EmlExtractor.mboxMessages(bytes).zipWithIndex.flatMap {
       case (msg, i) => emlDocs(s"$path#m$i", s"$rel#m$i", msg)
     }
-
-  /** Byte-fetch for an email media span minted by [[emlDocs]]: the
-    * `p<idx>:…` tail indexes the message's deterministic leaf walk;
-    * returns the CTE-DECODED part payload (codec-ready bytes).
-    */
-  def emlMediaPayload(emlBytes: Array[Byte],
-                      mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf("#p")
-    if (h < 0) None
-    else graft.extract.EmlExtractor.mediaPayload(
-      emlBytes, mediaRef.substring(h + 1))
-  }
 
   /** Generic single-file compression: `<name>.<ext>.<algo>` (algo ∈
     * gz/zst/xz/bz2/lz4/sz/snappy) inflates via [[graft.extract.Codecs]]
@@ -356,78 +204,44 @@ object RawFiles {
     * first — WarcExtractor reads per-record gzip members natively).
     */
   private def compressedDoc(path: String, bytes: Array[Byte],
-                            root: String, algo: String): Seq[InputDoc] = {
-    val inner = path.substring(0, path.length - (algo.length + 1))
-    val lp = inner.toLowerCase
-    val dot = lp.lastIndexOf('.')
-    val e = if (dot < 0) "" else lp.substring(dot + 1)
-    TextExt.get(e) match {
+                            root: String, algo: String): Seq[InputDoc] =
+    FrontEnds.TextExt.get(
+        FrontEnds.ext(path.substring(0, path.length - (algo.length + 1))))
+      match {
       case Some(k) =>
         val inflated = graft.extract.Codecs.inflate(algo, bytes)
         if (inflated.isEmpty) Nil else docsOf(k, path, inflated, root)
       case None => Nil
     }
-  }
 
-  /** One InputDoc per archive MEMBER file (`<relpath>#<member>`),
-    * each routed by its own extension through the same suffix dispatch
-    * as a directory scan: text kinds decode via [[docSpans]] against
-    * the pseudo-path `<path>#<member>` (so a member pdf's embedded
-    * images mint `<path>#<member>#img<seq>:obj<N>` refs — fetch the
-    * member payload via [[archiveEntryPayload]] first), media suffixes
-    * become one by-reference span (bytes stay in the archive),
-    * unsupported suffixes drop, and NESTED archives (zip/tar/tgz/warc
-    * members) drop — one level of fan-out, documented in
-    * [[graft.extract.ArchiveExtractor]].
+  /** One InputDoc per archive MEMBER file (`<relpath>#<member>`): a
+    * child document by the child-document rule, decoded against the
+    * pseudo-path `<path>#<member>` (so a member pdf's embedded images
+    * mint `<path>#<member>#img<seq>:obj<N>` refs — fetch the member
+    * payload via [[mediaPayload]] first); a media-suffixed member is
+    * one by-reference span (bytes stay in the archive); anything else
+    * drops.
     */
   private def archiveDocs(path: String, rel: String,
                           bytes: Array[Byte]): Seq[InputDoc] =
     graft.extract.ArchiveExtractor.entries(bytes).flatMap { en =>
-      val lp = en.name.toLowerCase
-      val dot = lp.lastIndexOf('.')
-      val e = if (dot < 0) "" else lp.substring(dot + 1)
-      // container kinds inside a container drop — ONE fan-out level
-      // (zip/tar/warc members, jsonl shards, mail spools, feeds)
-      val nested = e == "zip" || e == "tar" || e == "tgz" || e == "7z" ||
-        e == "warc" || e == "jsonl" || e == "ndjson" || e == "eml" ||
-        e == "mbox" || e == "rss" || e == "atom" ||
-        lp.endsWith(".tar.gz") || lp.endsWith(".warc.gz")
-      // `.xml` members are NOT nested containers anymore: generic XML
-      // decodes via docSpans("xml"); a feed-rooted member still yields
-      // nothing there (one fan-out level).
-      val docId = s"$rel#${en.name}"
-      val pseudo = s"$path#${en.name}"
-      if (nested) None
-      else TextExt.get(e) match {
-        case Some(k) =>
-          val spans = docSpans(k, pseudo, en.body)
-          if (spans.isEmpty) None else Some(InputDoc(docId, spans))
-        case None => MediaExt.get(e).map(k =>
-          InputDoc(docId, Vector(Span(k, null, pseudo, 0))))
-      }
+      childDoc(path, rel, en.name, en.name, en.body).orElse(
+        FrontEnds.MediaExt.get(FrontEnds.ext(en.name)).map(k =>
+          InputDoc(s"$rel#${en.name}",
+            Vector(Span(k, null, s"$path#${en.name}", 0)))))
     }
-
-  /** Byte-fetch for an archive media-member span minted by
-    * [[archiveDocs]]: the `#<member>` tail names the member file.
-    */
-  def archiveEntryPayload(archiveBytes: Array[Byte],
-                          mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.indexOf('#')
-    if (h < 0) None
-    else graft.extract.ArchiveExtractor.entryPayload(
-      archiveBytes, mediaRef.substring(h + 1))
-  }
 
   /** One InputDoc per retained WARC record. Payload routing:
     * image/audio/video mimes become a single by-reference media span
     * (`<path>#r<idx>` — bytes stay in the archive, recoverable via
-    * [[warcRecordPayload]]); document mimes route through [[docSpans]]
-    * with the pseudo-path `<path>#r<idx>` (so a pdf record's embedded
+    * [[mediaPayload]]); document mimes decode through the front-end
+    * table with the pseudo-path `<path>#r<idx>` (so a pdf record's embedded
     * images mint `<path>#r<idx>#img<seq>:obj<N>` refs — fetch the
-    * record payload first, then [[pdfImagePayload]] against it);
-    * unrecognized binary mimes drop UNLESS a content magic claims them
-    * (a pdf served as application/octet-stream still extracts). A
-    * record payload that is itself WARC reads as text — no recursion.
+    * record payload first, then the pdf image against it);
+    * unrecognized binary mimes drop UNLESS a content sniff claims them
+    * (a pdf, ODT or legacy `.doc` served as application/octet-stream
+    * still extracts). A record payload that is itself WARC reads as
+    * text — no recursion.
     */
   private def warcDocs(path: String, rel: String,
                        bytes: Array[Byte]): Seq[InputDoc] =
@@ -441,29 +255,20 @@ object RawFiles {
           case Some(mk) =>
             Some(InputDoc(docId, Vector(Span(mk, null, pseudo, 0))))
           case None =>
-            warcPayloadKind(rec.mime, rec.body).flatMap { k =>
-              val spans = docSpans(k, pseudo, rec.body, rec.charset)
-              if (spans.isEmpty) None else Some(InputDoc(docId, spans))
-            }
+            warcPayloadKind(rec.mime, rec.body).flatMap(k => nonEmptyDoc(docId,
+              FrontEnds.decode(k, pseudo, rec.body, rec.charset)))
         }
     }
 
   /** MIME → ingest kind for a WARC record payload. Document mimes map
     * to their front ends; `text/`-prefixed and ABSENT mimes read as text
-    * (WET conversion records routinely omit parameters) — [[docSpans]]
-    * content magic still reroutes binary payloads it recognizes;
-    * anything else maps to text iff a content magic claims it, else
+    * (WET conversion records routinely omit parameters) — the content
+    * sniff still reroutes binary payloads it recognizes;
+    * anything else maps to text iff the content sniff claims it, else
     * the record drops (the reference's suffix-filter posture).
     */
   private def warcPayloadKind(mime: String,
-                              body: Array[Byte]): Option[String] = {
-    def magic: Boolean =
-      graft.extract.RealPdf.isPdf(body) ||
-      graft.extract.DocxExtractor.isDocx(body) ||
-      graft.extract.EpubExtractor.isEpub(body) ||
-      graft.extract.XlsxExtractor.isXlsx(body) ||
-      graft.extract.PptxExtractor.isPptx(body) ||
-      graft.extract.RtfExtractor.isRtf(body)
+                              body: Array[Byte]): Option[String] =
     if (mime.contains("html")) Some("html")
     else if (mime.contains("pdf")) Some("pdf")
     else if (mime.contains("markdown")) Some("md")
@@ -475,431 +280,28 @@ object RawFiles {
     else if (mime.contains("ipynb")) Some("ipynb")
     else if (mime.contains("json")) Some("json") // incl. application/json
     else if (mime.startsWith("text/") || mime.isEmpty) Some("text")
-    else if (magic) Some("text") // docSpans reroutes by the magic
+    else if (FrontEnds.sniff(body).isDefined) Some("text") // rerouted
     else None
-  }
 
-  /** Byte-fetch for a WARC media-record span minted by [[warcDocs]]:
-    * the `#r<idx>` tail indexes the retained-record vector.
+  /** The bytes behind a media span: `kind` is the ingest kind of the
+    * payload that minted it, `bytes` that ORIGINAL payload, `mediaRef`
+    * the span's media_ref. Ref forms: pdf `…#img<seq>:obj<N>` (the
+    * codec-ready image — DCT as its JPEG, rasters as PNG, feeding
+    * [[graft.ops.Multimodal.ImageIoCodec]] directly; `…:inline` has no
+    * bytes); docx/pptx/epub/odt/rtf/doc/xls/ppt/ipynb `…#<part>`; zip/tar
+    * `…#<member>`; warc `…#r<idx>`; eml `…#p<idx>:<name>`. Spans carry
+    * references, the store carries bytes, and a decode stage joins them
+    * per partition. None for a ref the payload did not mint.
     */
-  def warcRecordPayload(warcBytes: Array[Byte],
-                        mediaRef: String): Option[Array[Byte]] =
-    "#r(\\d+)$".r.findFirstMatchIn(mediaRef).flatMap(m =>
-      graft.extract.WarcExtractor.recordPayload(
-        warcBytes, m.group(1).toInt))
-
-  private[graft] def docSpans(kind: String, path: String,
-                              bytes: Array[Byte],
-                              transportCharset: String = ""): Vector[Span] = {
-    // CONTENT MAGIC overrides extension within the text-kind family:
-    // web corpora routinely misname files (a crawler's `.txt` that is
-    // really a PDF, a CMS download endpoint serving DOCX as `.html`).
-    // Only payloads that START with a binary container magic reroute
-    // (%PDF- / zip-with-word/document.xml) — anything else keeps its
-    // suffix classification, so genuine text never misroutes. Files
-    // OUTSIDE the text suffixes are untouched: the reference's suffix
-    // filter (media by reference, unknown dropped) stays authoritative.
-    val kindEff =
-      if (graft.extract.RealPdf.isPdf(bytes)) "pdf"
-      else if (graft.extract.DocxExtractor.isDocx(bytes)) "docx"
-      else if (graft.extract.EpubExtractor.isEpub(bytes)) "epub"
-      else if (graft.extract.XlsxExtractor.isXlsx(bytes)) "xlsx"
-      else if (graft.extract.PptxExtractor.isPptx(bytes)) "pptx"
-      else if (graft.extract.RtfExtractor.isRtf(bytes)) "rtf"
-      else if (graft.extract.OdtExtractor.isOdt(bytes)) "odt"
-      else if (graft.extract.Cfb.isCfb(bytes))
-        graft.extract.Cfb.officeKind(bytes)
-      else if (kind == "text" && graft.extract.TexExtractor.isTex(bytes))
-        "tex"
-      else if (kind == "text" && {
-        val head = new String(bytes, 0,
-          math.min(bytes.length, 512),
-          java.nio.charset.StandardCharsets.UTF_8)
-        graft.extract.SubtitleExtractor.isVtt(head) ||
-          graft.extract.SubtitleExtractor.isSrt(head)
-      }) "subs"
-      else kind
-    docSpansDispatch(kindEff, path, bytes, transportCharset)
-  }
-
-  private def docSpansDispatch(kind: String, path: String,
-                               bytes: Array[Byte],
-                               transportCharset: String): Vector[Span] =
-    if (kind == "pdf" && graft.extract.RealPdf.isPdf(bytes)) {
-      val (pages, images) = graft.extract.RealPdf.parseDoc(bytes, 1)
-      Span("pdf", graft.extract.RealPdf.toContentStream(pages), null, 0) +:
-        images.map { im =>
-          // objNum 0 = inline image (BI…EI) — it has no object identity,
-          // only its occurrence position
-          val tail = if (im.objNum > 0) s"obj${im.objNum}" else "inline"
-          Span("image", null, s"$path#img${im.seq}:$tail", im.seq + 1)
-        }
-    } else if (kind == "docx" && graft.extract.DocxExtractor.isDocx(bytes)) {
-      graft.extract.DocxExtractor.items(bytes).zipWithIndex.map {
-        case (graft.extract.DocxExtractor.Text(t), k) =>
-          Span("text", t, null, k)
-        case (graft.extract.DocxExtractor.Media(mk, ref), k) =>
-          Span(mk, null, s"$path#$ref", k)
-      }
-    } else if (kind == "epub" && graft.extract.EpubExtractor.isEpub(bytes)) {
-      // EPUB decodes at the ingest boundary: spine-ordered chapter
-      // blocks as "text" spans, chapter media as media spans whose ref
-      // tail is the IN-ARCHIVE path (payloads recoverable via
-      // [[epubMediaPayload]]); external http(s)/data srcs pass through
-      // verbatim like HTML.
-      graft.extract.EpubExtractor.items(bytes).zipWithIndex.map {
-        case (graft.extract.EpubExtractor.Text(t), k) =>
-          Span("text", t, null, k)
-        case (graft.extract.EpubExtractor.Media(mk, ref), k) =>
-          val full = if (ref.matches("(?i)^(https?|data):.*")) ref
-                     else s"$path#$ref"
-          Span(mk, null, full, k)
-      }
-    } else if (kind == "xlsx" && graft.extract.XlsxExtractor.isXlsx(bytes)) {
-      // XLSX decodes at the ingest boundary into the engine's TABLE
-      // vocabulary: each non-empty worksheet's used range enters as one
-      // "text" span holding its TSV (tab-joined cells, newline-joined
-      // rows — exactly the shape markdown pipe tables and HTML <table>
-      // recovery produce), in workbook order. Empty sheets emit nothing.
-      graft.extract.XlsxExtractor.sheets(bytes)
-        .collect { case (_, tsv) if tsv.exists(!_.isWhitespace) => tsv }
-        .zipWithIndex.map { case (tsv, k) => Span("text", tsv, null, k) }
-    } else if (kind == "pptx" && graft.extract.PptxExtractor.isPptx(bytes)) {
-      // PPTX decodes at the ingest boundary like DOCX: slide paragraphs
-      // as verbatim "text" spans (presentation order), pictures as media
-      // spans whose ref tail is the IN-ARCHIVE path (payloads via
-      // [[pptxMediaPayload]]); external http(s)/data Targets verbatim.
-      graft.extract.PptxExtractor.items(bytes).zipWithIndex.map {
-        case (graft.extract.PptxExtractor.Text(t), k) =>
-          Span("text", t, null, k)
-        case (graft.extract.PptxExtractor.Media(mk, ref), k) =>
-          val full = if (ref.matches("(?i)^(https?|data):.*")) ref
-                     else s"$path#$ref"
-          Span(mk, null, full, k)
-      }
-    } else if (kind == "rtf" && graft.extract.RtfExtractor.isRtf(bytes)) {
-      // RTF decodes at the ingest boundary like DOCX: paragraphs as
-      // verbatim "text" spans, tables as TSV text blocks (the engine's
-      // table vocabulary), embedded pictures as media spans whose ref
-      // tail is the minted per-doc pict id (payloads recoverable via
-      // [[rtfMediaPayload]]).
-      graft.extract.RtfExtractor.items(bytes).zipWithIndex.map {
-        case (graft.extract.RtfExtractor.Text(t), k) =>
-          Span("text", t, null, k)
-        case (graft.extract.RtfExtractor.Media(mk, ref), k) =>
-          Span(mk, null, s"$path#$ref", k)
-      }
-    } else if (kind == "odt" && graft.extract.OdtExtractor.isOdt(bytes)) {
-      // ODT decodes at the ingest boundary like DOCX: paragraph/heading
-      // "text" spans, tables as TSV blocks (the engine's table
-      // vocabulary), images as media spans whose ref tail is the
-      // IN-ARCHIVE path (payloads via [[odtMediaPayload]]); external
-      // http(s)/data hrefs verbatim.
-      graft.extract.OdtExtractor.items(bytes).zipWithIndex.map {
-        case (graft.extract.OdtExtractor.Text(t), k) =>
-          Span("text", t, null, k)
-        case (graft.extract.OdtExtractor.Media(mk, ref), k) =>
-          val full = if (ref.matches("(?i)^(https?|data):.*")) ref
-                     else s"$path#$ref"
-          Span(mk, null, full, k)
-      }
-    } else if (kind == "tex") {
-      // LaTeX decodes at the ingest boundary like markdown — detex'd
-      // blocks (headings/captions/paragraphs/verbatim/TSV tables) as
-      // "text" spans, \includegraphics refs as media spans with the
-      // path passing through VERBATIM (external reference; arXiv
-      // sources resolve figures at build time, not in the archive).
-      graft.extract.TexExtractor.items(
-          graft.extract.CharsetSniff.decode(bytes, html = false,
-            transportCharset))
-        .zipWithIndex.map {
-          case (graft.extract.TexExtractor.Block(t), k) =>
-            Span("text", t, null, k)
-          case (graft.extract.TexExtractor.Media(mk, ref), k) =>
-            Span(mk, null, ref, k)
-        }
-    } else if (kind == "doc" && graft.extract.Cfb.isCfb(bytes)) {
-      // Word 97–2003 binary decodes at the ingest boundary: the
-      // WordDocument piece table reassembles into paragraph "text"
-      // spans (field codes dropped/results kept, cell marks split,
-      // encrypted documents drop whole); 0x01 picture anchors emit
-      // media spans at anchor position, pairing with the Data
-      // stream's bitmap BLIPs (payloads via [[docMediaPayload]]).
-      // A CFB container WITHOUT a readable WordDocument yields
-      // nothing — a structured-storage binary must never decode as
-      // mojibake "text".
-      graft.extract.DocExtractor.items(bytes).zipWithIndex.map {
-        case (graft.extract.DocExtractor.Text(t), k) =>
-          Span("text", t, null, k)
-        case (graft.extract.DocExtractor.Media(mk, ref), k) =>
-          Span(mk, null, s"$path#$ref", k)
-      }
-    } else if (kind == "ppt" && graft.extract.PptExtractor.isPpt(bytes)) {
-      // PowerPoint 97–2003 binary decodes at the ingest boundary like
-      // PPTX: slide paragraphs as verbatim "text" spans in stream
-      // order, embedded pictures as media spans AT SHAPE POSITION
-      // whose ref tail is the minted BLIP-store index (payloads
-      // recoverable via [[pptMediaPayload]]); encrypted decks drop
-      // whole.
-      graft.extract.PptExtractor.items(bytes).zipWithIndex.map {
-        case (graft.extract.PptExtractor.Text(t), k) =>
-          Span("text", t, null, k)
-        case (graft.extract.PptExtractor.Media(mk, ref), k) =>
-          Span(mk, null, s"$path#$ref", k)
-      }
-    } else if (kind == "xls" && graft.extract.XlsExtractor.isXls(bytes)) {
-      // Excel 97–2003 binary decodes at the ingest boundary into the
-      // engine's TABLE vocabulary exactly like XLSX: each non-empty
-      // worksheet's used range is ONE "text" span holding its TSV, in
-      // workbook order; chart sheets and empty sheets emit nothing.
-      // ...followed by each sheet's embedded pictures as media spans
-      // (OfficeArtFOPT pib → MsoDrawingGroup BLIP store; payloads via
-      // [[xlsMediaPayload]])
-      graft.extract.XlsExtractor.items(bytes).zipWithIndex.map {
-        case (graft.extract.XlsExtractor.Text(t), k) =>
-          Span("text", t, null, k)
-        case (graft.extract.XlsExtractor.Media(mk, ref), k) =>
-          Span(mk, null, s"$path#$ref", k)
-      }
-    } else if (kind == "csv") {
-      // Delimited data decodes at the ingest boundary into the TABLE
-      // vocabulary: the whole file is ONE "text" span holding its grid
-      // as TSV (delimiter sniffed for .csv — comma/semicolon/tab/pipe
-      // — RFC 4180 quoting, cells normalized, rows padded); empty
-      // files yield nothing.
-      val tsv = graft.extract.CsvExtractor.tsv(
-        graft.extract.CharsetSniff.decode(bytes, html = false,
-          transportCharset),
-        tabDelimited = path.toLowerCase.endsWith(".tsv"))
-      if (tsv.isEmpty) Vector.empty
-      else Vector(Span("text", tsv, null, 0))
-    } else if (kind == "xml" || kind == "feed") {
-      // Generic (non-feed) XML decodes at the ingest boundary: tags
-      // are structure, character data is content — one "text" span
-      // per text-bearing element per [[graft.extract.XmlExtractor]]'s
-      // block rule (CDATA verbatim, entities decoded, DOCTYPE/PI/
-      // comment apparatus dropped, XML-decl encoding honored). A FEED
-      // reaching this path (archive member / attachment — contexts
-      // where the one-fan-out-level rule forbids entry expansion)
-      // yields nothing, same as every nested container; top-level
-      // feeds fan out via [[docsOf]] before dispatch.
-      if (graft.extract.FeedExtractor.isFeed(bytes)) Vector.empty
-      else graft.extract.XmlExtractor.blocks(bytes)
-        .zipWithIndex.map { case (t, k) => Span("text", t, null, k) }
-    } else if (kind == "subs") {
-      // Subtitles decode at the ingest boundary: one "text" span per
-      // cue (timing/index/NOTE apparatus dropped, formatting and voice
-      // tags stripped, entities decoded, rolling duplicates collapsed)
-      // — the SubRip/WebVTT cue machine in
-      // [[graft.extract.SubtitleExtractor]]. A subtitle-suffixed file
-      // with no cues yields nothing.
-      graft.extract.SubtitleExtractor.items(
-          graft.extract.CharsetSniff.decode(bytes, html = false,
-            transportCharset))
-        .zipWithIndex.map { case (t, k) => Span("text", t, null, k) }
-    } else if (kind == "json") {
-      // whole-file JSON at the SPAN level (archive members, eml/pdf
-      // attachments — the doc-level single/array fan-out lives in
-      // [[jsonDocs]]): notebook-shaped payloads delegate to the ipynb
-      // front end by content magic; otherwise retained records' texts
-      // enter in order (object → one span, HF array → one per element).
-      graft.extract.JsonlExtractor.routeJson(bytes) match {
-        case Left(_) => docSpans("ipynb", path, bytes, transportCharset)
-        case Right(recs) => recs.zipWithIndex
-          .map { case (r, k) => Span("text", r.text, null, k) }
-      }
-    } else if (kind == "ipynb") {
-      // Jupyter notebooks decode at the ingest boundary: markdown
-      // cells through the MdExtractor semantics (headings, paragraphs,
-      // pipe tables), code cells and result reprs as verbatim "text"
-      // spans, attachment/output images as in-file media spans
-      // (payloads via [[ipynbMediaPayload]]); external markdown image
-      // URLs pass verbatim. Malformed JSON yields no spans.
-      graft.extract.IpynbExtractor.items(bytes).zipWithIndex.map {
-        case (graft.extract.IpynbExtractor.Text(t), k) =>
-          Span("text", t, null, k)
-        case (graft.extract.IpynbExtractor.Media(mk, ref, inFile), k) =>
-          Span(mk, null, if (inFile) s"$path#$ref" else ref, k)
-      }
-    } else if (kind == "md") {
-      // Markdown decodes at the ingest boundary like DOCX — text blocks
-      // as "text" spans, image/media references as media spans with the
-      // URL passing through VERBATIM (external reference, like an HTML
-      // src attribute; there is no archive to resolve against).
-      graft.extract.MdExtractor.items(
-          graft.extract.CharsetSniff.decode(bytes, html = false,
-            transportCharset))
-        .zipWithIndex.map {
-          case (graft.extract.MdExtractor.Block(t), k) =>
-            Span("text", t, null, k)
-          case (graft.extract.MdExtractor.Media(mk, ref), k) =>
-            Span(mk, null, ref, k)
-        }
-    } else Vector(Span(
-      if (kind == "docx" || kind == "epub" || kind == "xlsx" ||
-          kind == "pptx" || kind == "rtf" || kind == "odt" ||
-          kind == "tex" || kind == "doc" || kind == "xls" ||
-          kind == "ppt") "text"
-      else kind,
-      graft.extract.CharsetSniff.decode(bytes, html = kind == "html",
-        transportCharset), null, 0))
-
-  /** Text-payload decode: the full [[graft.extract.CharsetSniff]]
-    * WHATWG chain with no transport signal and no meta prescan —
-    * BOM at byte 0 (dropped) > strict-UTF-8 validity > windows-1252.
-    * Web corpora carry Windows-exported UTF-16 .txt files and
-    * windows-1252 "plain text" that would otherwise decode to
-    * NUL-ridden or U+FFFD mojibake; honest UTF-8 never misroutes
-    * (a BOM mid-file is content, and the validity scan is the exact
-    * UTF-8 definition, so any valid UTF-8 payload decodes as UTF-8).
-    * HTML payloads do NOT come through here — [[docSpansDispatch]]
-    * decodes them with the meta prescan enabled.
-    */
-  private[graft] def decodeTextPayload(bytes: Array[Byte]): String =
-    graft.extract.CharsetSniff.decode(bytes, html = false)
-
-  /** Byte-fetch for an EPUB media span minted by [[docSpans]]: the ref
-    * tail after `#` is the in-archive path, resolved against the
-    * ORIGINAL book bytes. The EPUB third of the media-by-reference
-    * contract ([[pdfImagePayload]] / [[docxMediaPayload]] are the
-    * others).
-    */
-  /** Byte-fetch for a PPTX media span minted by [[docSpans]]: the ref
-    * tail after `#` is the in-archive part path.
-    */
-  def pptxMediaPayload(pptxBytes: Array[Byte],
-                       mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf('#')
-    if (h < 0) None
-    else graft.extract.PptxExtractor.mediaPayload(
-      pptxBytes, mediaRef.substring(h + 1))
-  }
-
-  /** Byte-fetch for a legacy `.doc` media span minted by [[docSpans]]:
-    * the ref tail after `#` is `pic<n>`, the n-th bitmap BLIP of the
-    * document's Data stream.
-    */
-  def docMediaPayload(docBytes: Array[Byte],
-                      mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf('#')
-    if (h < 0) None
-    else graft.extract.DocExtractor.mediaPayload(
-      docBytes, mediaRef.substring(h + 1))
-  }
-
-  /** Byte-fetch for a legacy `.xls` media span minted by [[docSpans]]:
-    * the ref tail after `#` is `pic<pib>`, resolved through the
-    * workbook's MsoDrawingGroup BLIP store.
-    */
-  def xlsMediaPayload(xlsBytes: Array[Byte],
-                      mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf('#')
-    if (h < 0) None
-    else graft.extract.XlsExtractor.mediaPayload(
-      xlsBytes, mediaRef.substring(h + 1))
-  }
-
-  /** Byte-fetch for a legacy `.ppt` media span minted by [[docSpans]]:
-    * the ref tail after `#` is `pic<pib>`, resolved through the deck's
-    * BLIP store (FBSE → `Pictures`-stream offset or embedded BLIP).
-    */
-  def pptMediaPayload(pptBytes: Array[Byte],
-                      mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf('#')
-    if (h < 0) None
-    else graft.extract.PptExtractor.mediaPayload(
-      pptBytes, mediaRef.substring(h + 1))
-  }
-
-  /** Byte-fetch for an RTF media span minted by [[docSpans]]: the ref
-    * tail after `#` is the per-doc pict id, resolved by re-parsing the
-    * ORIGINAL rtf bytes.
-    */
-  def rtfMediaPayload(rtfBytes: Array[Byte],
-                      mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf('#')
-    if (h < 0) None
-    else graft.extract.RtfExtractor.mediaPayload(
-      rtfBytes, mediaRef.substring(h + 1))
-  }
-
-  def epubMediaPayload(epubBytes: Array[Byte],
-                       mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf('#')
-    if (h < 0) None
-    else graft.extract.EpubExtractor.mediaPayload(
-      epubBytes, mediaRef.substring(h + 1))
-  }
-
-  /** Byte-fetch for an ODT media span minted by [[docSpans]]: the ref
-    * tail after `#` is the in-archive target (`Pictures/…`).
-    */
-  def odtMediaPayload(odtBytes: Array[Byte],
-                      mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf('#')
-    if (h < 0) None
-    else graft.extract.OdtExtractor.mediaPayload(
-      odtBytes, mediaRef.substring(h + 1))
-  }
-
-  /** Byte-fetch for a notebook media span minted by [[docSpans]]: the
-    * ref tail after `#` is `att<cell>:<name>` (markdown attachment) or
-    * `out<cell>:<idx>` (code output image), base64-decoded from the
-    * ORIGINAL notebook JSON.
-    */
-  def ipynbMediaPayload(nbBytes: Array[Byte],
-                        mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf('#')
-    if (h < 0) None
-    else graft.extract.IpynbExtractor.mediaPayload(
-      nbBytes, mediaRef.substring(h + 1))
-  }
-
-  /** Byte-fetch for a DOCX media span minted by [[docSpans]]: the ref
-    * tail after `#` is the relationship Target, resolved against the
-    * ORIGINAL archive bytes (part `word/<target>`). The DOCX half of
-    * the media-by-reference contract ([[pdfImagePayload]] is the PDF
-    * half).
-    */
-  def docxMediaPayload(docxBytes: Array[Byte],
-                       mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf('#')
-    if (h < 0) None
-    else graft.extract.DocxExtractor.mediaPayload(
-      docxBytes, mediaRef.substring(h + 1))
-  }
-
-  /** Recover the CODEC-READY payload behind a media span minted by
-    * [[docSpans]]: a media_ref of the form `<path>#img<seq>:obj<N>`
-    * resolves through [[graft.extract.RealPdf.imageCodecBytes]] against
-    * the ORIGINAL pdf bytes — a DCTDecode image returns its embedded
-    * JPEG unchanged; raster images (Flate/predictor, LZW, CCITT
-    * Group-4 scans) return their decoded samples wrapped as a PNG —
-    * either way the bytes feed
-    * [[graft.ops.Multimodal.ImageIoCodec]] directly. Inline `…:inline`
-    * refs return None — their bytes live in the content stream and
-    * carry dims-only metadata by design. This is the byte-fetch half
-    * of the media-by-reference contract: spans carry references, the
-    * store carries bytes, and a decode stage joins them per partition.
-    */
-  def pdfImagePayload(pdfBytes: Array[Byte],
-                      mediaRef: String): Option[Array[Byte]] = {
-    val h = mediaRef.lastIndexOf("#img")
-    if (h < 0) None
-    else {
-      val colon = mediaRef.indexOf(':', h)
-      if (colon < 0 || !mediaRef.startsWith("obj", colon + 1)) None
-      else mediaRef.substring(colon + 4).toIntOption
-        .flatMap(n => graft.extract.RealPdf.imageCodecBytes(pdfBytes, n))
-    }
-  }
+  def mediaPayload(kind: String, bytes: Array[Byte],
+                   mediaRef: String): Option[Array[Byte]] =
+    FrontEnds.fetch(kind, bytes, mediaRef)
 
   /** Classify + decode ONE file into its InputDocs: text kinds decode
-    * their payload (WARC files FAN OUT to one doc per record), media
+    * their payload (containers FAN OUT to one doc per unit), media
     * kinds pass by reference (bytes unused), and unsupported suffixes
-    * return empty (the reference's suffix filter). Row-level twin of
-    * the column-level classification in [[read]]; used by
-    * [[graft.streaming.StreamingIngest.startRawDir]].
+    * return empty (the reference's suffix filter). The one routing
+    * [[read]] and [[graft.streaming.StreamingIngest.startRawDir]] share.
     */
   def decodeAny(path: String, content: Array[Byte],
                 root: String): Seq[InputDoc] = {
@@ -908,12 +310,10 @@ object RawFiles {
     val e = if (dot < 0) lp else lp.substring(dot + 1)
     if (lp.endsWith(".warc.gz")) docsOf("warc", path, content, root)
     else if (lp.endsWith(".tar.gz")) docsOf("tar", path, content, root)
-    else if (e == "gz" || e == "zst" || e == "xz" || e == "bz2" ||
-             e == "lz4" || e == "sz" || e == "snappy")
-      docsOf(e, path, content, root)
-    else TextExt.get(e) match {
+    else if (Compressed(e)) docsOf(e, path, content, root)
+    else FrontEnds.TextExt.get(e) match {
       case Some(kind) => docsOf(kind, path, content, root)
-      case None => MediaExt.get(e).map(kind =>
+      case None => FrontEnds.MediaExt.get(e).map(kind =>
         InputDoc(relativize(path, root),
           Vector(Span(kind, null, path, 0)))).toSeq
     }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.extract.EmlExtractor
+import graft.extract.{EmlExtractor, Media, Text}
 import graft.gen.EmlGen
 import graft.sources.RawFiles
 import org.scalatest.funsuite.AnyFunSuite
@@ -66,20 +66,20 @@ class EmlSpec extends AnyFunSuite with SparkSuite {
 
   test("parse: alternative picks plain; cid image emits once, at its reference position") {
     val alt = EmlExtractor.parse(EmlGen.fileBytes(3))
-    assert(alt.items.count { case EmlExtractor.Text(_) => true
+    assert(alt.items.count { case Text(_) => true
                              case _ => false } == 2) // subject + plain
-    assert(alt.items.collect { case EmlExtractor.Text(t) => t }
+    assert(alt.items.collect { case Text(t) => t }
       .exists(_.startsWith("Quarterly report")))
 
     val rel = EmlExtractor.parse(EmlGen.fileBytes(5))
     val kinds = rel.items.map {
-      case EmlExtractor.Text(_) => "t"
-      case EmlExtractor.Media(_, _) => "m"
+      case Text(_) => "t"
+      case Media(_, _, _) => "m"
     }
     // subject, block, media AT TAG POSITION, block — and no trailing
     // standalone emission of the cid part
     assert(kinds == Vector("t", "t", "m", "t"))
-    val refs = rel.items.collect { case EmlExtractor.Media(_, r) => r }
+    val refs = rel.items.collect { case Media(_, r, _) => r }
     assert(refs == Vector("p1:part.jpeg"))
   }
 
@@ -98,6 +98,37 @@ class EmlSpec extends AnyFunSuite with SparkSuite {
         assert(got.exists(_.sameElements(want)), s"variant $i $tail")
       }
     }
+  }
+
+  test("document attachments follow the child-document rule: a .doc and a text/csv attachment fan out through their front ends") {
+    val doc = graft.gen.DocGen.fileBytes(0)
+    val bnd = "b1"
+    val msg = b(Seq("From: a@example.org", "To: b@example.org",
+        "Subject: memo", "Message-ID: <m1@example.org>",
+        "MIME-Version: 1.0",
+        s"Content-Type: multipart/mixed; boundary=$bnd")
+        .mkString("", CRLF, CRLF + CRLF) +
+      s"--$bnd${CRLF}Content-Type: text/plain$CRLF$CRLF" +
+      s"See the attached memo.$CRLF" +
+      s"--$bnd${CRLF}Content-Type: application/msword$CRLF" +
+      s"Content-Disposition: attachment; filename=\"memo.doc\"$CRLF" +
+      s"Content-Transfer-Encoding: base64$CRLF$CRLF" +
+      java.util.Base64.getMimeEncoder.encodeToString(doc) + CRLF +
+      s"--$bnd${CRLF}Content-Type: text/csv$CRLF" +
+      s"Content-Disposition: attachment; filename=\"t.csv\"$CRLF$CRLF" +
+      s"a,b${CRLF}1,2$CRLF--$bnd--$CRLF")
+    val docs = RawFiles.decodeAny("m.eml", msg, "")
+      .map(d => d.doc_id -> d.spans.map(s => (s.kind, s.text))).toMap
+    assert(docs.keySet == Set("m.eml", "m.eml#a1:memo.doc", "m.eml#a2:t.csv"))
+    // the csv is its own document now, no longer inlined into the body
+    assert(docs("m.eml") == Vector(("text", "Subject: memo"),
+      ("text", "See the attached memo.")))
+    // each attachment decodes exactly as the same bytes under its name
+    def alone(name: String, bytes: Array[Byte]) = RawFiles
+      .decodeAny(name, bytes, "").head.spans.map(s => (s.kind, s.text))
+    assert(docs("m.eml#a1:memo.doc") == alone("memo.doc", doc))
+    assert(docs("m.eml#a1:memo.doc").head._2.nonEmpty)
+    assert(docs("m.eml#a2:t.csv") == alone("t.csv", b("a,b\r\n1,2")))
   }
 
   test("mbox spool: member fan-out, separator framing, mboxrd unescape") {

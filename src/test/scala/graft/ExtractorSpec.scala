@@ -1,7 +1,7 @@
 package graft
 
 import graft.core._
-import graft.extract.{Extractor, HtmlExtractor, PdfTokenizer}
+import graft.extract.{Extractor, HtmlExtractor, Media, PdfTokenizer, Text}
 import graft.gen.CorpusGen
 import graft.oracle.RefOracle
 import org.scalatest.funsuite.AnyFunSuite
@@ -234,22 +234,22 @@ class ExtractorSpec extends AnyFunSuite {
       "<picture><source srcset=pic.png><img src=fb.png></picture>"
     val items = HtmlExtractor.items(html)
     assert(items == Vector(
-      HtmlExtractor.Block("First real paragraph long enough to keep around."),
-      HtmlExtractor.Media("image", "fig.png?a=1&b=2"),
+      Text("First real paragraph long enough to keep around."),
+      Media("image", "fig.png?a=1&b=2", inFile = false),
       // a media tag inside a not-yet-flushed block precedes that block
-      HtmlExtractor.Media("image", "innie.png"),
-      HtmlExtractor.Block("Inline split paragraph body text here."),
-      HtmlExtractor.Media("video", "clip.mp4"),
-      HtmlExtractor.Media("audio", "pod.mp3"),
-      HtmlExtractor.Media("image", "real.png"),
+      Media("image", "innie.png", inFile = false),
+      Text("Inline split paragraph body text here."),
+      Media("video", "clip.mp4", inFile = false),
+      Media("audio", "pod.mp3", inFile = false),
+      Media("image", "real.png", inFile = false),
       // lazy-load fallback chain: data-src / srcset first candidate /
       // data-srcset; src wins when non-empty; <source> inside
       // <picture> stays ignored (the <img> fallback carries the ref)
-      HtmlExtractor.Media("image", "lazy.png"),
-      HtmlExtractor.Media("image", "small.png"),
-      HtmlExtractor.Media("image", "ds.png"),
-      HtmlExtractor.Media("image", "win.png"),
-      HtmlExtractor.Media("image", "fb.png")), items)
+      Media("image", "lazy.png", inFile = false),
+      Media("image", "small.png", inFile = false),
+      Media("image", "ds.png", inFile = false),
+      Media("image", "win.png", inFile = false),
+      Media("image", "fb.png", inFile = false)), items)
     // dual-impl equality over the full extraction path
     val d = InputDoc("m", Vector(Span("html", html, null, 0)))
     assert(Extractor.extract(d).outSpans == RefOracle.extract(d).outSpans)
@@ -259,7 +259,7 @@ class ExtractorSpec extends AnyFunSuite {
       "<img src=x.png/><img src=a.png src=b.png><img = src=y.png>" +
       "<img/src=weird><IMG SRC=UP.PNG><img src=&#120;.png>"
     assert(HtmlExtractor.items(edge).collect {
-      case HtmlExtractor.Media(_, r) => r } ==
+      case Media(_, r, _) => r } ==
       Vector("x.png/", "a.png", "y.png", "weird", "UP.PNG", "x.png"))
     val d2 = InputDoc("e", Vector(Span("html", edge, null, 0)))
     assert(Extractor.extract(d2).outSpans == RefOracle.extract(d2).outSpans)
@@ -278,10 +278,10 @@ class ExtractorSpec extends AnyFunSuite {
       "<p>Closing body paragraph long enough to keep as well.</p>"
     val items = HtmlExtractor.items(html)
     assert(items == Vector(
-      HtmlExtractor.Block("Article body paragraph long enough to keep around fine."),
-      HtmlExtractor.Block("Commentary is content, not a comment thread, kept."),
-      HtmlExtractor.Block("Badge classes do not hit the ad token by substring."),
-      HtmlExtractor.Block("Closing body paragraph long enough to keep as well.")),
+      Text("Article body paragraph long enough to keep around fine."),
+      Text("Commentary is content, not a comment thread, kept."),
+      Text("Badge classes do not hit the ad token by substring."),
+      Text("Closing body paragraph long enough to keep as well.")),
       items)
     val d = InputDoc("neg", Vector(Span("html", html, null, 0)))
     assert(Extractor.extract(d).outSpans == RefOracle.extract(d).outSpans)
@@ -289,7 +289,7 @@ class ExtractorSpec extends AnyFunSuite {
     val messy = "<div class=sidebar><p>junk long enough to be a block</p>" +
       "</section></div><p>After the sidebar, content long enough kept.</p>"
     assert(HtmlExtractor.items(messy) == Vector(
-      HtmlExtractor.Block("After the sidebar, content long enough kept.")))
+      Text("After the sidebar, content long enough kept.")))
     val d2 = InputDoc("messy", Vector(Span("html", messy, null, 0)))
     assert(Extractor.extract(d2).outSpans == RefOracle.extract(d2).outSpans)
     // cross-name mis-nesting (ADVICE r05): both gates must release via
@@ -298,7 +298,7 @@ class ExtractorSpec extends AnyFunSuite {
       "<p>buried junk long enough to form a block</p></div></section>" +
       "<p>Kept after cross-name mis-nested junk containers close.</p>"
     assert(HtmlExtractor.items(crossNest) == Vector(
-      HtmlExtractor.Block(
+      Text(
         "Kept after cross-name mis-nested junk containers close.")))
     val d3 = InputDoc("crossnest", Vector(Span("html", crossNest, null, 0)))
     assert(Extractor.extract(d3).outSpans == RefOracle.extract(d3).outSpans)

@@ -450,7 +450,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     for (src <- Seq(edge, docsDf.select("text").limit(300))) {
       val a = src.select(TextOps.langIdGuess(col("text")))
         .collect().map(_.getString(0))
-      val b = src.select(TextOps.langIdGuessComposed(col("text")))
+      val b = src.select(ComposedForms.langIdGuessComposed(col("text")))
         .collect().map(_.getString(0))
       assert(a.sameElements(b), a.zip(b).filter(p => p._1 != p._2)
         .mkString(","))
@@ -481,10 +481,10 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     // cosine, uncast float×float (float-product precision) and cast path
     assert(bits(ej.select(Dedup.cosine(col("va"), col("vb"))))
       .sameElements(bits(ej.select(
-        Dedup.cosineComposed(col("va"), col("vb"))))), "float cosine")
+        ComposedForms.cosineComposed(col("va"), col("vb"))))), "float cosine")
     assert(bits(ej.select(Dedup.cosine(col("va").cast("array<double>"),
         col("vb").cast("array<double>"))))
-      .sameElements(bits(ej.select(Dedup.cosineComposed(
+      .sameElements(bits(ej.select(ComposedForms.cosineComposed(
         col("va").cast("array<double>"), col("vb").cast("array<double>"))))),
       "double cosine")
     // degenerate inputs, native semantics pinned directly: zero norm →
@@ -502,31 +502,31 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     val j = a40.crossJoin(b40)
     assert(bits(j.select(Dedup.cosine(col("va"), col("vb"))))
       .sameElements(bits(j.select(
-        Dedup.cosineComposed(col("va"), col("vb"))))), "emb cosine")
+        ComposedForms.cosineComposed(col("va"), col("vb"))))), "emb cosine")
     // SQ8 scale / codes / code cosine
     val sc = e.select(col("vec_id"), col("embedding"),
       Similarity.int8Scale(col("embedding")).as("s"))
     val scC = e.select(col("vec_id"), col("embedding"),
-      Similarity.int8ScaleComposed(col("embedding")).as("s"))
+      ComposedForms.int8ScaleComposed(col("embedding")).as("s"))
     assert(bits(sc.select(col("s"))).sameElements(bits(scC.select(col("s")))),
       "sq8 scale")
     val codes = sc.select(col("vec_id").as("ia"),
       Similarity.int8Codes(col("embedding"), col("s")).as("ca"))
     val codesC = scC.select(col("vec_id").as("ib"),
-      Similarity.int8CodesComposed(col("embedding"), col("s")).as("cb"))
+      ComposedForms.int8CodesComposed(col("embedding"), col("s")).as("cb"))
     assert(codes.collect().map(_.getSeq[Int](1)).toSeq ==
       codesC.collect().map(_.getSeq[Int](1)).toSeq, "sq8 codes")
     val cj = codes.limit(30).crossJoin(codesC.limit(30))
     assert(bits(cj.select(Similarity.codeCosine(col("ca"), col("cb"))))
       .sameElements(bits(cj.select(
-        Similarity.codeCosineComposed(col("ca"), col("cb"))))),
+        ComposedForms.codeCosineComposed(col("ca"), col("cb"))))),
       "code cosine")
     // hyperplane sketch (two plane counts, incl. > 8)
     for (p <- Seq(6, 17)) {
       val n = e.select(Similarity.hyperplaneSketch(col("embedding"), p))
         .collect().map(_.getLong(0))
       val c = e.select(
-          Similarity.hyperplaneSketchComposed(col("embedding"), p))
+          ComposedForms.hyperplaneSketchComposed(col("embedding"), p))
         .collect().map(_.getLong(0))
       assert(n.sameElements(c), s"hyperplane sketch nPlanes=$p")
     }
@@ -535,21 +535,21 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     val asg = Similarity.ivfAssign(e, "vec_id", "embedding", cents)
       .select("vec_id", "cell_id").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val asgC = Similarity.ivfAssignComposed(e, "vec_id", "embedding", cents)
+    val asgC = ComposedForms.ivfAssignComposed(e, "vec_id", "embedding", cents)
       .select("vec_id", "cell_id").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(asg.sameElements(asgC), "ivf assign")
     // PQ encode + ADC score vs composed
     val books = Similarity.trainPqCodebooks(e, "vec_id", "embedding",
       m = 8, ksub = 16, sampleN = 100, iters = 2)
     val pq = Similarity.pqEncode(e, "vec_id", "embedding", books)
-    val pqC = Similarity.pqEncodeComposed(e, "vec_id", "embedding", books)
+    val pqC = ComposedForms.pqEncodeComposed(e, "vec_id", "embedding", books)
     assert(pq.collect().map(_.getSeq[Int](1)).toSeq ==
       pqC.collect().map(_.getSeq[Int](1)).toSeq, "pq codes")
     val q = e.limit(1).collect()(0).getSeq[Float](1).toArray
     val lut = Similarity.pqQueryLut(q, books)
     assert(bits(pq.select(Similarity.pqAdcScore(col("codes"), lut)))
       .sameElements(bits(pqC.select(
-        Similarity.pqAdcScoreComposed(col("codes"), lut)))), "adc score")
+        ComposedForms.pqAdcScoreComposed(col("codes"), lut)))), "adc score")
     // null-ELEMENT arrays (r06 review): sketch degenerates to 0L,
     // cell id to null, PQ codes to the min-norm codewords — exactly
     // what the composed forms produce
@@ -557,7 +557,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       Option(2.0f), Option(0.5f)))).toDF("id", "v")
     assert(nullElem.select(Similarity.hyperplaneSketch(col("v"), 6))
       .collect()(0).getLong(0) ==
-      nullElem.select(Similarity.hyperplaneSketchComposed(col("v"), 6))
+      nullElem.select(ComposedForms.hyperplaneSketchComposed(col("v"), 6))
         .collect()(0).getLong(0), "null-elem sketch")
     val smallCents = Array((0L, Array(1f, 0f, 0f, 0f)),
       (1L, Array(0f, 1f, 0f, 0f)))
@@ -574,7 +574,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
       Array(Array(0.5, 0.5), Array(0.0, 0.1)))
     assert(Similarity.pqEncode(nullElem, "id", "v", smallBooks)
       .select("codes").collect()(0).getSeq[Int](0) ==
-      Similarity.pqEncodeComposed(nullElem, "id", "v", smallBooks)
+      ComposedForms.pqEncodeComposed(nullElem, "id", "v", smallBooks)
         .select("codes").collect()(0).getSeq[Int](0), "null-elem pq")
     // all kernels stay inside whole-stage codegen
     val plan = e.select(Dedup.cosine(col("embedding"), col("embedding")),
@@ -591,7 +591,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
         .map(r => if (r.isNullAt(0)) null else r.getSeq[Long](0))
     for ((w, k) <- Seq((3, 64), (5, 16), (1, 8))) {
       val a = sigs(Dedup.minhashSignature(col("text"), w, k))
-      val b = sigs(Dedup.minhashSignatureComposed(col("text"), w, k))
+      val b = sigs(ComposedForms.minhashSignatureComposed(col("text"), w, k))
       assert(a.length == b.length)
       assert(a.zip(b).forall { case (x, y) =>
         (x == null && y == null) || x == y }, s"mismatch at w=$w k=$k")
@@ -606,7 +606,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
         .map(r => if (r.isNullAt(0)) null else r.getSeq[Long](0))
     for ((w, k) <- Seq((3, 8), (1, 4), (2, 4))) {
       val a = esigs(Dedup.minhashSignature(col("text"), w, k))
-      val b = esigs(Dedup.minhashSignatureComposed(col("text"), w, k))
+      val b = esigs(ComposedForms.minhashSignatureComposed(col("text"), w, k))
       assert(a.zip(b).forall { case (x, y) =>
         (x == null && y == null) || x == y }, s"edge mismatch at w=$w k=$k")
     }
@@ -1385,7 +1385,7 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     // r06 native expression == the pre-r06 composed five-regexp form,
     // on the pins and the adversarial set (and codegen'd)
     val composedSide = adversarial.toDF("url")
-      .select(TextOps.canonicalUrlComposed(col("url")))
+      .select(ComposedForms.canonicalUrlComposed(col("url")))
       .as[String].collect().toSeq
     assert(sparkSide == composedSide,
       sparkSide.zip(composedSide).filter(p => p._1 != p._2).mkString("\n"))

@@ -102,7 +102,7 @@ class RawFilesSpec extends AnyFunSuite with SparkSuite {
     // to a CODEC-READY payload — the raw 24x16 /DeviceGray samples
     // wrapped as a PNG a standard codec reads directly
     val pdfBytes = Files.readAllBytes(dir.resolve("doc_0001.pdf"))
-    val payload = RawFiles.pdfImagePayload(pdfBytes, img(1).media_ref)
+    val payload = RawFiles.mediaPayload("pdf", pdfBytes, img(1).media_ref)
     val png = javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(payload.get))
     assert(png.getWidth == 24 && png.getHeight == 16)
@@ -111,9 +111,10 @@ class RawFilesSpec extends AnyFunSuite with SparkSuite {
     assert(png.getRaster.getSample(1, 0, 0) == 8)
     assert(png.getRaster.getSample(0, 1, 0) == (24 * 7 + 1) % 256)
     // inline refs are dims-only metadata: no recoverable object stream
-    assert(RawFiles.pdfImagePayload(pdfBytes,
+    assert(RawFiles.mediaPayload("pdf", pdfBytes,
       "x.pdf#img2:inline").isEmpty)
-    assert(RawFiles.pdfImagePayload(pdfBytes, "no-fragment.pdf").isEmpty)
+    assert(
+      RawFiles.mediaPayload("pdf", pdfBytes, "no-fragment.pdf").isEmpty)
   }
 
   test("genuine DOCX decodes to interleaved text+media spans at the ingest boundary") {
@@ -156,7 +157,7 @@ class RawFilesSpec extends AnyFunSuite with SparkSuite {
       oracleRows.outSpans.map(o => (o.kind, o.text, o.media_ref, o.order)))
     // byte-fetch half: the media ref resolves back to the stored part
     val bytes = Files.readAllBytes(dir.resolve("memo_0008.docx"))
-    val payload = RawFiles.docxMediaPayload(bytes, memo(1).media_ref)
+    val payload = RawFiles.mediaPayload("docx", bytes, memo(1).media_ref)
     assert(payload.exists(_.nonEmpty))
   }
 
@@ -206,7 +207,7 @@ class RawFilesSpec extends AnyFunSuite with SparkSuite {
       "book_0001.epub#" + graft.gen.EpubGen.imgPath(1)))
     // byte-fetch half: the ref resolves back to the stored entry
     val bytes = Files.readAllBytes(dir.resolve("book_0001.epub"))
-    assert(RawFiles.epubMediaPayload(bytes, img.media_ref)
+    assert(RawFiles.mediaPayload("epub", bytes, img.media_ref)
       .exists(_.length == 5))
     assert(docs("fake.epub").spans ==
       Vector(Span("text", "just plain bytes", null, 0)))

@@ -140,15 +140,40 @@ class WarcSpec extends AnyFunSuite with SparkSuite {
     val pdfSpans = batch(s"$f0#r1:https://example.org/0/doc.pdf")
     assert(pdfSpans.head.kind == "pdf" && pdfSpans.head.text != null)
     // the image resource record is media BY REFERENCE: bytes stay in
-    // the archive, recoverable through warcRecordPayload
+    // the archive, recoverable through mediaPayload
     val imgSpans = batch(s"$f0#r5:https://cdn.example.org/0/banner.png")
     assert(imgSpans.map(s => (s.kind, s.text)) ==
       Vector(("image", null)))
     val ref = imgSpans.head.media_ref
     assert(ref.endsWith(s"/$f0#r5"))
-    val fetched = RawFiles.warcRecordPayload(
+    val fetched = RawFiles.mediaPayload("warc",
       Files.readAllBytes(dir.resolve(f0)), ref)
     assert(fetched.exists(_.sameElements(WarcGen.imgPayload(0))))
+  }
+
+  test("octet-stream records route by the full content sniff: ODT and CFB documents extract, unclaimed bytes drop") {
+    def resp(uri: String, body: Array[Byte]) = rec(
+      Seq("WARC-Type: response", s"WARC-Target-URI: $uri",
+          "Content-Type: application/http; msgtype=response"),
+      http("200 OK", Seq("Content-Type: application/octet-stream"), body))
+    val files = Seq(
+      "x.odt" -> graft.gen.OdtGen.fileBytes(0),
+      "x.doc" -> graft.gen.DocGen.fileBytes(0),
+      "x.xls" -> graft.gen.XlsGen.fileBytes(0))
+    val seg = files.zipWithIndex.map { case ((_, body), i) =>
+      resp(s"http://a/$i", body) }.reduce(_ ++ _) ++
+      resp("http://a/junk", Array.fill[Byte](64)(7))
+    val docs = RawFiles.decodeAny("seg.warc", seg, "")
+      .map(d => d.doc_id -> d.spans.map(s => (s.kind, s.text))).toMap
+    assert(docs.keySet ==
+      files.indices.map(i => s"seg.warc#r$i:http://a/$i").toSet)
+    // each record decodes exactly as the same bytes under their suffix
+    files.zipWithIndex.foreach { case ((name, body), i) =>
+      val want = RawFiles.decodeAny(name, body, "").head.spans
+        .map(s => (s.kind, s.text))
+      assert(want.exists(_._2 != null), name)
+      assert(docs(s"seg.warc#r$i:http://a/$i") == want, name)
+    }
   }
 
   test("ex_warc query matches the generator ground truth end-to-end") {
