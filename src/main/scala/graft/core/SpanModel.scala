@@ -135,6 +135,7 @@ case class ExtractedRow(
 
 /** Per-partition lineage/metrics sidecar row (north-rule requirement;
   * generalizes the reference's processed-count counter, setup.sql:259-274).
+  * `bytes_in` is the UTF-8 byte size of the input spans' text.
   */
 case class PartitionMetrics(
   run_id: String, group: Int, partition_id: Int, task_attempt: Long,

@@ -1,5 +1,6 @@
 package graft.extract
 
+import graft.extract.Codecs.Entry
 import scala.collection.mutable.ArrayBuffer
 
 /** Archive front end: `.zip`, `.tar`, `.tar.gz`/`.tgz`, `.7z`
@@ -18,12 +19,12 @@ import scala.collection.mutable.ArrayBuffer
   *
   * == Exact member semantics (shared with the test-side twin) ==
   *
-  *  - ZIP: local-file-record walk via `ZipInputStream` (sequential —
-  *    no central-directory seek, so a truncated tail keeps the members
-  *    already read). Directory entries skip; on duplicate names the
-  *    FIRST occurrence wins (the [[DocxExtractor]] rule). A zip that
-  *    an OOXML/EPUB detector claims is NOT an archive — those formats
-  *    are zips too and their front ends own them ([[isPlainZip]]).
+  *  - ZIP: the one zip walk, [[Codecs.zipEntries]] (local records in
+  *    order, so a truncated tail keeps the members already read).
+  *    Directory entries skip; on duplicate names the FIRST occurrence
+  *    wins (the OOXML part rule). A zip that an OOXML/EPUB detector
+  *    claims is NOT an archive — those formats are zips too and their
+  *    front ends own them ([[isPlainZip]]).
   *  - TAR (POSIX ustar and pre-POSIX v7): 512-byte headers — NUL-
   *    terminated name at +0 (prefixed by the ustar `prefix` field at
   *    +345 when present), octal size at +124 (leading spaces/NULs
@@ -33,15 +34,17 @@ import scala.collection.mutable.ArrayBuffer
   *    (or running off the end) terminate. A malformed header ends the
   *    walk with the members already read.
   *  - `.tar.gz` / `.tgz`: gunzip (all members, corrupt-tail-tolerant
-  *    — [[WarcExtractor.gunzipAll]]) then the tar walk.
-  *  - 7z (`'7z'` BC AF 27 1C magic): LZMA/LZMA2 solid archives via the
-  *    commons-compress `SevenZFile` already on Spark's classpath (the
-  *    one container here whose compression spec — LZMA range coding —
-  *    is out of scope for a from-scratch reader; the MEMBER semantics
-  *    match the zip/tar walks: dirs skip, dup names first-wins, a
-  *    corrupt tail keeps the members already inflated, encrypted
-  *    archives yield nothing). Deterministic member ORDER is the
+  *    — [[Codecs.inflate]]) then the tar walk.
+  *  - 7z (`'7z'` BC AF 27 1C magic): LZMA/LZMA2 solid archives via
+  *    [[Codecs.sevenZEntries]] (commons-compress — the one container
+  *    here whose compression spec — LZMA range coding — is out of
+  *    scope for a from-scratch reader; the MEMBER semantics match the
+  *    zip/tar walks: dirs skip, dup names first-wins, a corrupt tail
+  *    keeps the members already inflated, encrypted archives yield
+  *    nothing). Deterministic member ORDER is the
   *    archive's own entry order, like zip's local-record order.
+  *  - A zip or 7z member past [[Codecs.MaxInflated]] is skipped; a
+  *    `.tar.gz` past it yields no members.
   *
   * Nested archives do NOT recurse (an entry named `inner.zip` /
   * `inner.tar` / `inner.warc` is dropped by the ingest router): one
@@ -49,23 +52,19 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Scale: one archive = one `binaryFile` row decoded streamwise inside
   * the scan task — same contract as WARC segments; dump conventions
-  * keep archives in the 100 MB–1 GB band, far below executor memory,
-  * and a 100 TB delivery is ~100k+ splits of natural parallelism.
+  * keep archives in the 100 MB–1 GB band, and a 100 TB delivery is
+  * ~100k+ splits of natural parallelism. A `.tar.gz` body and each
+  * zip/7z member inflate whole, each under [[Codecs.MaxInflated]] (an
+  * eighth of the task's heap).
   */
 object ArchiveExtractor {
-
-  final case class Entry(name: String, body: Array[Byte])
-
-  def isZip(bytes: Array[Byte]): Boolean =
-    bytes.length >= 4 && bytes(0) == 'P' && bytes(1) == 'K' &&
-      bytes(2) == 3 && bytes(3) == 4
 
   /** Zip magic AND claimed by no front end's content sniff — an
     * OOXML/EPUB/ODF package is a zip whose decode belongs to its own
     * extractor ([[FrontEnds.sniff]]).
     */
   def isPlainZip(bytes: Array[Byte]): Boolean =
-    isZip(bytes) && FrontEnds.sniff(bytes).isEmpty
+    Codecs.isZip(bytes) && FrontEnds.sniff(bytes).isEmpty
 
   /** `ustar` magic at +257 (POSIX), or a v7-style header: printable
     * NUL-terminated name + valid octal size + plausible checksum field.
@@ -87,15 +86,7 @@ object ArchiveExtractor {
       (bytes(4) & 0xff) == 0x27 && (bytes(5) & 0xff) == 0x1c
 
   def isTarGz(bytes: Array[Byte]): Boolean =
-    bytes.length >= 2 && (bytes(0) & 0xff) == 0x1f &&
-      (bytes(1) & 0xff) == 0x8b && isTar(gunzipHead512(bytes))
-
-  private def gunzipHead512(bytes: Array[Byte]): Array[Byte] =
-    try {
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      try in.readNBytes(512) finally in.close()
-    } catch { case _: Exception => Array.emptyByteArray }
+    isTar(Codecs.gunzipHead(bytes, 512))
 
   /** Header checksum: sum of all 512 header bytes with the checksum
     * field [148,156) read as spaces equals the octal value stored
@@ -137,23 +128,6 @@ object ArchiveExtractor {
       java.nio.charset.StandardCharsets.ISO_8859_1)
   }
 
-  def zipEntries(bytes: Array[Byte]): Vector[Entry] = {
-    val out = ArrayBuffer.empty[Entry]
-    val seen = scala.collection.mutable.Set.empty[String]
-    try {
-      val z = new java.util.zip.ZipInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      var e = z.getNextEntry
-      while (e != null) {
-        if (!e.isDirectory && seen.add(e.getName))
-          out += Entry(e.getName, z.readAllBytes())
-        e = z.getNextEntry
-      }
-      z.close()
-    } catch { case _: Exception => () }
-    out.toVector
-  }
-
   def tarEntries(bytes: Array[Byte]): Vector[Entry] = {
     val out = ArrayBuffer.empty[Entry]
     val seen = scala.collection.mutable.Set.empty[String]
@@ -190,51 +164,11 @@ object ArchiveExtractor {
     * not an archive → empty.
     */
   def entries(bytes: Array[Byte]): Vector[Entry] =
-    if (isPlainZip(bytes)) zipEntries(bytes)
-    else if (isTarGz(bytes)) tarEntries(WarcExtractor.gunzipAll(bytes))
+    if (isPlainZip(bytes)) Codecs.zipEntries(bytes)._1 // keeps a prefix
+    else if (isTarGz(bytes)) tarEntries(Codecs.inflate("gz", bytes))
     else if (isTar(bytes)) tarEntries(bytes)
-    else if (isSevenZ(bytes)) sevenZEntries(bytes)
+    else if (isSevenZ(bytes)) Codecs.sevenZEntries(bytes) // stops at a failure
     else Vector.empty
-
-  /** 7z member walk (commons-compress). Per-entry try: a corruption
-    * mid-stream keeps the members already inflated; password-protected
-    * entries (which throw on read) skip. Dirs skip; dup names
-    * first-wins — the zip rule.
-    */
-  def sevenZEntries(bytes: Array[Byte]): Vector[Entry] = {
-    val out = ArrayBuffer.empty[Entry]
-    val seen = scala.collection.mutable.Set.empty[String]
-    try {
-      val f = org.apache.commons.compress.archivers.sevenz.SevenZFile
-        .builder()
-        .setSeekableByteChannel(
-          new org.apache.commons.compress.utils.SeekableInMemoryByteChannel(
-            bytes))
-        .get()
-      try {
-        var e = f.getNextEntry
-        var ok = true
-        while (ok && e != null) {
-          if (!e.isDirectory && seen.add(e.getName)) {
-            // read the CURRENT entry's stream (solid archives decode
-            // sequentially; a failure poisons everything after it)
-            val body = try {
-              val bos = new java.io.ByteArrayOutputStream()
-              val buf = new Array[Byte](8192)
-              var n = f.read(buf)
-              while (n > 0) { bos.write(buf, 0, n); n = f.read(buf) }
-              Some(bos.toByteArray)
-            } catch { case _: Exception => ok = false; None }
-            body.foreach(b => out += Entry(e.getName, b))
-          }
-          if (ok) e = try f.getNextEntry catch {
-            case _: Exception => null
-          }
-        }
-      } finally f.close()
-    } catch { case _: Exception => () }
-    out.toVector
-  }
 
   /** Body bytes of the named member — the byte-fetch half of the
     * media-by-reference contract for archive-embedded media files.

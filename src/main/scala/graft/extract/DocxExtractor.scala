@@ -1,7 +1,5 @@
 package graft.extract
 
-import java.io.ByteArrayInputStream
-import java.util.zip.ZipInputStream
 import scala.collection.mutable.ArrayBuffer
 
 /** DOCX (WordprocessingML) front end: paragraphs + embedded media from
@@ -21,8 +19,9 @@ import scala.collection.mutable.ArrayBuffer
   *
   * A payload is DOCX iff it starts with the ZIP local-header magic
   * `PK\x03\x04` AND the archive contains an entry `word/document.xml`
-  * (entries read sequentially via ZipInputStream; on duplicate names the
-  * FIRST occurrence wins; any zip-format error anywhere ⇒ not DOCX).
+  * (parts read by the one zip walk, [[Codecs.zipPart]]: on duplicate
+  * names the FIRST occurrence wins; a zip-format error before or in the
+  * part, or a part past [[Codecs.MaxInflated]], ⇒ not DOCX).
   *
   * Relationships: entry `word/_rels/document.xml.rels`, if present, is
   * scanned for `<Relationship ...>` tags; each contributes Id → Target
@@ -89,25 +88,10 @@ import scala.collection.mutable.ArrayBuffer
 object DocxExtractor {
 
   def isDocx(bytes: Array[Byte]): Boolean =
-    bytes.length > 4 && bytes(0) == 'P' && bytes(1) == 'K' &&
-      bytes(2) == 3 && bytes(3) == 4 && entry(bytes, DocPath).isDefined
+    Codecs.isZip(bytes) && Codecs.zipPart(bytes, DocPath).isDefined
 
   private val DocPath = "word/document.xml"
   private val RelsPath = "word/_rels/document.xml.rels"
-
-  /** First zip entry with this exact name, or None (including on any
-    * zip-format error — a mutated archive degrades, never throws).
-    */
-  private[extract] def entry(bytes: Array[Byte],
-                             name: String): Option[Array[Byte]] =
-    try {
-      val z = new ZipInputStream(new ByteArrayInputStream(bytes))
-      try {
-        Iterator.continually(z.getNextEntry)
-          .takeWhile(_ != null)
-          .collectFirst { case e if e.getName == name => z.readAllBytes() }
-      } finally z.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
 
   private def mediaKind(target: String): String = {
     val dot = target.lastIndexOf('.')
@@ -123,11 +107,11 @@ object DocxExtractor {
     * have checked [[isDocx]]; a non-archive here returns Vector.empty.
     */
   def items(bytes: Array[Byte]): Vector[Item] = {
-    val doc = entry(bytes, DocPath) match {
+    val doc = Codecs.zipPart(bytes, DocPath) match {
       case Some(b) => new String(b, java.nio.charset.StandardCharsets.UTF_8)
       case None    => return Vector.empty
     }
-    val rels = entry(bytes, RelsPath)
+    val rels = Codecs.zipPart(bytes, RelsPath)
       .map(b => parseRels(
         new String(b, java.nio.charset.StandardCharsets.UTF_8)))
       .getOrElse(Map.empty[String, String])
@@ -229,8 +213,8 @@ object DocxExtractor {
     * bytes: `word/<target>`, or package-absolute when `/`-prefixed.
     */
   def mediaPayload(bytes: Array[Byte], target: String): Option[Array[Byte]] =
-    entry(bytes, if (target.startsWith("/")) target.substring(1)
-                 else "word/" + target)
+    Codecs.zipPart(bytes, if (target.startsWith("/")) target.substring(1)
+                          else "word/" + target)
 
   // ---------- tag machinery ----------
 

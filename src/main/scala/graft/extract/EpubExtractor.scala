@@ -20,9 +20,10 @@ package graft.extract
   *    `META-INF/container.xml` entry (checked AFTER
   *    [[DocxExtractor.isDocx]] in ingestion — the two cannot clash,
   *    each requires its own marker entry).
-  *  - Zip entries read in one sequential pass; on duplicate names the
-  *    FIRST wins (matches [[DocxExtractor.entry]]); any zip-format
-  *    error degrades to no items, never throws.
+  *  - Zip entries read in one pass of the one zip walk,
+  *    [[Codecs.zipEntries]]; on duplicate names the FIRST wins (matches
+  *    [[Codecs.zipPart]]); any zip-format error degrades to no items,
+  *    never throws; a part past [[Codecs.MaxInflated]] reads as absent.
   *  - container.xml: the FIRST `<rootfile>`'s `full-path` attribute
   *    (entity-decoded) names the OPF. Missing/unreadable → no items.
   *  - OPF: manifest `<item>` `id` → `href`; spine `<itemref>` `idref`s
@@ -49,9 +50,7 @@ object EpubExtractor {
   private val ContainerPath = "META-INF/container.xml"
 
   def isEpub(bytes: Array[Byte]): Boolean =
-    bytes.length > 4 && bytes(0) == 'P' && bytes(1) == 'K' &&
-      bytes(2) == 3 && bytes(3) == 4 &&
-      DocxExtractor.entry(bytes, ContainerPath).isDefined
+    Codecs.isZip(bytes) && Codecs.zipPart(bytes, ContainerPath).isDefined
 
   private val RootfileRx =
     "(?s)<rootfile\\b[^>]*\\bfull-path\\s*=\\s*\"([^\"]*)\"".r
@@ -87,22 +86,12 @@ object EpubExtractor {
     if (sl < 0) "" else path.substring(0, sl)
   }
 
-  /** All zip entries in one pass, FIRST definition winning on duplicate
-    * names; Map.empty on any zip error.
-    */
+  /** All zip entries by name; Map.empty on any zip error. */
   private def allEntries(bytes: Array[Byte]): Map[String, Array[Byte]] =
-    try {
-      val z = new java.util.zip.ZipInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      try {
-        var m = Map.empty[String, Array[Byte]]
-        Iterator.continually(z.getNextEntry).takeWhile(_ != null)
-          .foreach { e =>
-            if (!m.contains(e.getName)) m += e.getName -> z.readAllBytes()
-          }
-        m
-      } finally z.close()
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+    Codecs.zipEntries(bytes) match {
+      case (es, true) => es.map(e => e.name -> e.body).toMap
+      case _ => Map.empty
+    }
 
   private val SchemeRx = "(?i)^(https?|data):.*".r
 
@@ -153,5 +142,5 @@ object EpubExtractor {
     * bytes.
     */
   def mediaPayload(bytes: Array[Byte], path: String): Option[Array[Byte]] =
-    DocxExtractor.entry(bytes, path)
+    Codecs.zipPart(bytes, path)
 }

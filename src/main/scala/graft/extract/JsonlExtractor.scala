@@ -33,6 +33,8 @@ package graft.extract
   *
   * Scale: shard conventions keep jsonl files in the 100 MB–1 GB band;
   * one shard = one `binaryFile` row decoded linewise in the scan task.
+  * A compressed shard inflates whole first, so one inflating past
+  * [[Codecs.MaxInflated]] (an eighth of the task's heap) gives no docs.
   * (A splittable `spark.read.json` path would go further for plain
   * jsonl, but shards gzip at rest — `.jsonl.gz` is whole-file work
   * either way, and the binaryFile route keeps ONE ingest contract

@@ -1,7 +1,5 @@
 package graft.extract
 
-import java.io.ByteArrayInputStream
-import java.util.zip.ZipInputStream
 import scala.collection.mutable.ArrayBuffer
 
 /** OpenDocument Text (ODF 1.2, the LibreOffice/OpenOffice `.odt`
@@ -55,16 +53,14 @@ object OdtExtractor {
     "application/vnd.oasis.opendocument.presentation")
 
   def isOdt(bytes: Array[Byte]): Boolean =
-    bytes.length > 4 && bytes(0) == 'P' && bytes(1) == 'K' &&
-      bytes(2) == 3 && bytes(3) == 4 &&
-      DocxExtractor.entry(bytes, "mimetype").exists(m =>
-        OdfMimes.contains(
-          new String(m, java.nio.charset.StandardCharsets.UTF_8).trim))
+    Codecs.isZip(bytes) && Codecs.zipPart(bytes, "mimetype").exists(m =>
+      OdfMimes.contains(
+        new String(m, java.nio.charset.StandardCharsets.UTF_8).trim))
 
   private val MaxRepeat = 1000
 
   def items(bytes: Array[Byte]): Vector[Item] = {
-    val doc = DocxExtractor.entry(bytes, "content.xml") match {
+    val doc = Codecs.zipPart(bytes, "content.xml") match {
       case Some(b) => new String(b, java.nio.charset.StandardCharsets.UTF_8)
       case None    => return Vector.empty
     }
@@ -206,6 +202,6 @@ object OdtExtractor {
 
   /** Byte-fetch for an in-archive media target (`Pictures/…`). */
   def mediaPayload(bytes: Array[Byte], target: String): Option[Array[Byte]] =
-    DocxExtractor.entry(bytes,
+    Codecs.zipPart(bytes,
       if (target.startsWith("/")) target.substring(1) else target)
 }

@@ -74,9 +74,7 @@ object PptxExtractor {
   private val PresRels = "ppt/_rels/presentation.xml.rels"
 
   def isPptx(bytes: Array[Byte]): Boolean =
-    bytes.length > 4 && bytes(0) == 'P' && bytes(1) == 'K' &&
-      bytes(2) == 3 && bytes(3) == 4 &&
-      DocxExtractor.entry(bytes, PresPath).isDefined
+    Codecs.isZip(bytes) && Codecs.zipPart(bytes, PresPath).isDefined
 
   /** `.`/`..` segment normalization for OPC part paths. */
   private[graft] def normalizePath(path: String): String = {
@@ -129,11 +127,11 @@ object PptxExtractor {
 
   /** Slide part paths in presentation order (normalized, in-archive). */
   private[extract] def slideParts(bytes: Array[Byte]): Vector[String] = {
-    val pres = DocxExtractor.entry(bytes, PresPath) match {
+    val pres = Codecs.zipPart(bytes, PresPath) match {
       case Some(b) => utf8(b)
       case None    => return Vector.empty
     }
-    val rels = DocxExtractor.entry(bytes, PresRels)
+    val rels = Codecs.zipPart(bytes, PresRels)
       .map(b => parseRels(utf8(b))).getOrElse(Map.empty[String, String])
     val out = ArrayBuffer.empty[String]
     var i = 0
@@ -164,11 +162,11 @@ object PptxExtractor {
   def items(bytes: Array[Byte]): Vector[Item] = {
     val out = ArrayBuffer.empty[Item]
     slideParts(bytes).foreach { part =>
-      DocxExtractor.entry(bytes, part).foreach { slideBytes =>
+      Codecs.zipPart(bytes, part).foreach { slideBytes =>
         val dir = part.substring(0, part.lastIndexOf('/') + 1)
         val relsPath = dir + "_rels/" +
           part.substring(part.lastIndexOf('/') + 1) + ".rels"
-        val rels = DocxExtractor.entry(bytes, relsPath)
+        val rels = Codecs.zipPart(bytes, relsPath)
           .map(b => parseRels(utf8(b)))
           .getOrElse(Map.empty[String, String])
         slideItems(utf8(slideBytes), dir, rels, out)
@@ -295,5 +293,5 @@ object PptxExtractor {
     * back to its part bytes.
     */
   def mediaPayload(bytes: Array[Byte], ref: String): Option[Array[Byte]] =
-    DocxExtractor.entry(bytes, ref)
+    Codecs.zipPart(bytes, ref)
 }

@@ -22,10 +22,11 @@ import scala.collection.mutable.ArrayBuffer
   * A payload is WARC iff it starts with the 5 bytes `WARC/` at byte 0
   * (the [[RealPdf.isPdf]] rule); `.warc.gz` payloads start with the
   * gzip magic `1f 8b` and their INFLATED stream starts with `WARC/`
-  * (the standard layout is one gzip member per record — Java's
-  * GZIPInputStream reads concatenated members natively, so the whole
-  * file inflates in one pass; a corrupt tail keeps the records already
-  * decoded).
+  * (the standard layout is one gzip member per record — the gzip codec
+  * reads concatenated members natively, so the whole file inflates in
+  * one pass through [[Codecs.inflate]]; a corrupt tail keeps the
+  * records already decoded, a file past [[Codecs.MaxInflated]] yields
+  * none).
   *
   * Records parse as: version line `WARC/x.y`, CRLF header lines
   * `Name: value` (names case-insensitive, LF-only tolerated) up to an
@@ -57,9 +58,10 @@ import scala.collection.mutable.ArrayBuffer
   * A record payload that is itself WARC reads as content (no recursive
   * archive expansion — archives arrive as files, not as records).
   *
-  * Scale: one WARC segment = one `binaryFile` row, decoded streamwise
-  * inside the scan task; the crawl convention of ~1 GB segments bounds
-  * per-task memory, and a 100 TB crawl is ~100k segments — far more
+  * Scale: one WARC segment = one `binaryFile` row, decoded inside the
+  * scan task; a `.warc.gz` segment inflates whole, so it must inflate
+  * under [[Codecs.MaxInflated]] (an eighth of the task's heap) to give
+  * records, and a 100 TB crawl is ~100k segments — far more
   * split granularity than executor cores, no skew (segments are
   * size-balanced by the crawler itself).
   */
@@ -84,31 +86,7 @@ object WarcExtractor {
     * plain `.gz` of something else never misroutes.
     */
   def isWarcGz(bytes: Array[Byte]): Boolean =
-    bytes.length >= 2 && (bytes(0) & 0xff) == 0x1f &&
-      (bytes(1) & 0xff) == 0x8b && isWarc(gunzipHead(bytes, 5))
-
-  private def gunzipHead(bytes: Array[Byte], n: Int): Array[Byte] =
-    try {
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      try in.readNBytes(n) finally in.close()
-    } catch { case _: Exception => Array.emptyByteArray }
-
-  /** Inflate ALL gzip members (the per-record-member WARC convention);
-    * a corrupt tail returns what decoded so far.
-    */
-  private[graft] def gunzipAll(bytes: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(bytes.length * 4)
-    try {
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val buf = new Array[Byte](64 * 1024)
-      var k = in.read(buf)
-      while (k > 0) { out.write(buf, 0, k); k = in.read(buf) }
-      in.close()
-    } catch { case _: Exception => () }
-    out.toByteArray
-  }
+    isWarc(Codecs.gunzipHead(bytes, 5))
 
   /** Parse a `.warc` / `.warc.gz` payload into its RETAINED records,
     * file order. Not WARC → empty.
@@ -116,7 +94,7 @@ object WarcExtractor {
   def records(bytes: Array[Byte]): Vector[Rec] = {
     val raw =
       if (isWarc(bytes)) bytes
-      else if (isWarcGz(bytes)) gunzipAll(bytes)
+      else if (isWarcGz(bytes)) Codecs.inflate("gz", bytes) // keeps a prefix
       else return Vector.empty
     val out = ArrayBuffer.empty[Rec]
     var pos = 0

@@ -75,23 +75,21 @@ object XlsxExtractor {
   private val RelsPath = "xl/_rels/workbook.xml.rels"
 
   def isXlsx(bytes: Array[Byte]): Boolean =
-    bytes.length > 4 && bytes(0) == 'P' && bytes(1) == 'K' &&
-      bytes(2) == 3 && bytes(3) == 4 &&
-      DocxExtractor.entry(bytes, WorkbookPath).isDefined
+    Codecs.isZip(bytes) && Codecs.zipPart(bytes, WorkbookPath).isDefined
 
   /** (sheetName, tsv) in workbook order — empty sheets keep their slot
     * with tsv = "" so callers can decide (the ingest layer drops them).
     */
   def sheets(bytes: Array[Byte]): Vector[(String, String)] = {
-    val wb = DocxExtractor.entry(bytes, WorkbookPath) match {
+    val wb = Codecs.zipPart(bytes, WorkbookPath) match {
       case Some(b) => new String(b, java.nio.charset.StandardCharsets.UTF_8)
       case None    => return Vector.empty
     }
-    val rels = DocxExtractor.entry(bytes, RelsPath)
+    val rels = Codecs.zipPart(bytes, RelsPath)
       .map(b => parseRels(
         new String(b, java.nio.charset.StandardCharsets.UTF_8)))
       .getOrElse(Map.empty[String, String])
-    val sst = DocxExtractor.entry(bytes, "xl/sharedStrings.xml")
+    val sst = Codecs.zipPart(bytes, "xl/sharedStrings.xml")
       .map(b => parseSst(
         new String(b, java.nio.charset.StandardCharsets.UTF_8)))
       .getOrElse(Vector.empty)
@@ -100,7 +98,7 @@ object XlsxExtractor {
       rels.get(rid).flatMap { target =>
         val path = if (target.startsWith("/")) target.substring(1)
                    else "xl/" + target
-        DocxExtractor.entry(bytes, path).map(part =>
+        Codecs.zipPart(bytes, path).map(part =>
           name -> sheetTsv(
             new String(part, java.nio.charset.StandardCharsets.UTF_8), sst))
       }

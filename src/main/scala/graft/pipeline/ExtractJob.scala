@@ -60,6 +60,25 @@ object ExtractJob {
                        groupsSkipped: Seq[Int], docsProcessed: Long,
                        elapsedMs: Long, salted: Boolean)
 
+  /** UTF-8 byte length of `s` without encoding it: 1, 2 or 3 bytes per
+    * char, 4 per surrogate pair; a lone surrogate encodes as `?` (1).
+    */
+  private[graft] def utf8Length(s: String): Long = {
+    var n = 0L
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c < 0x80) n += 1
+      else if (c < 0x800) n += 2
+      else if (Character.isHighSurrogate(c) && i + 1 < s.length &&
+               Character.isLowSurrogate(s.charAt(i + 1))) { n += 4; i += 1 }
+      else if (Character.isSurrogate(c)) n += 1
+      else n += 3
+      i += 1
+    }
+    n
+  }
+
   /** Extract an iterator of docs, streaming (iterator-to-iterator — no
     * partition materialization), recording per-partition metrics.
     */
@@ -80,7 +99,8 @@ object ExtractJob {
           nDocs += 1
           if (d.spans != null) {
             nSpans += d.spans.size
-            d.spans.foreach(s => if (s.text != null) bytesIn += s.text.length)
+            d.spans.foreach(s =>
+              if (s.text != null) bytesIn += utf8Length(s.text))
           }
           val rows = Extractor.extractRows(d)
           nOut += rows.size

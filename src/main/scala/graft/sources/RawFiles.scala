@@ -209,6 +209,7 @@ object RawFiles {
         FrontEnds.ext(path.substring(0, path.length - (algo.length + 1))))
       match {
       case Some(k) =>
+        // corrupt: the prefix decoded so far; over the cap: empty, no doc
         val inflated = graft.extract.Codecs.inflate(algo, bytes)
         if (inflated.isEmpty) Nil else docsOf(k, path, inflated, root)
       case None => Nil

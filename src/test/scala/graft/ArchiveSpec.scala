@@ -65,7 +65,7 @@ class ArchiveSpec extends AnyFunSuite with SparkSuite {
       java.nio.charset.StandardCharsets.ISO_8859_1)
       .replace("b.txt", "a.txt")
       .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    val es = ArchiveExtractor.zipEntries(dup)
+    val es = graft.extract.Codecs.zipEntries(dup)._1
     assert(es.map(_.name) == Vector("a.txt"))
     assert(new String(es.head.body, "UTF-8") == "first")
     assert(ArchiveExtractor.isPlainZip(dup))
@@ -87,10 +87,10 @@ class ArchiveSpec extends AnyFunSuite with SparkSuite {
     assert(es(3).body.toSeq == ArchiveGen.imgPayload(3).toSeq)
     assert(new String(es(2).body, "UTF-8").startsWith("Archive note 3"))
     // corruption/truncation degrade, never throw
-    assert(ArchiveExtractor.sevenZEntries(
+    assert(graft.extract.Codecs.sevenZEntries(
       java.util.Arrays.copyOf(sz, 16)).isEmpty)
     for (cut <- Seq(sz.length / 4, sz.length / 2, sz.length - 3))
-      ArchiveExtractor.sevenZEntries(java.util.Arrays.copyOf(sz, cut))
+      graft.extract.Codecs.sevenZEntries(java.util.Arrays.copyOf(sz, cut))
     // a misnamed .txt that is really 7z still fans out (content magic)
     val docs = RawFiles.decodeAny("mislabeled7.txt", sz, "")
     assert(docs.map(_.doc_id).contains("mislabeled7.txt#notes_3.txt"))

@@ -172,6 +172,26 @@ class ExtractJobSpec extends AnyFunSuite with SparkSuite {
       .map(_.getString(0)).toSet == Set("committed"))
   }
 
+  test("metrics sidecar: bytes_in counts UTF-8 bytes, not chars") {
+    import spark.implicits._
+    val texts = Seq("café au lait", "数据处理管道", "launch 🚀 day", "plain")
+    val docs = texts.zipWithIndex.map { case (t, i) =>
+      InputDoc(s"u$i", Vector(Span("text", t, null, 0),
+        Span("image", null, s"img$i.png", 1)))
+    }.toDS()
+    val out = tmpDir("utf8")
+    ExtractJob.run(spark, docs,
+      ExtractJob.Config(out, runId = "u1", groups = 1, partitions = 2))
+    import org.apache.spark.sql.functions.sum
+    val got = spark.read.json(s"$out/metrics").agg(sum("bytes_in"))
+      .collect()(0).getLong(0)
+    assert(got == texts.map(_.getBytes("UTF-8").length).sum)
+    assert(got > texts.map(_.length).sum)
+    // lone surrogates encode as '?'
+    for (t <- texts ++ Seq("\uD83D", "a\uDE80b", "\uDE80\uD83D", ""))
+      assert(ExtractJob.utf8Length(t) == t.getBytes("UTF-8").length, t)
+  }
+
   test("chunks view matches oracle chunks (document_chunks semantics)") {
     val out = tmpDir("chunks")
     val docs = CorpusGen.dataset(spark, 300, 42L)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.extract.FrontEnds
 import graft.sources.RawFiles
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
@@ -8,6 +9,9 @@ import java.security.MessageDigest
   * makes, plus one pass over each file generator, digested per
   * (class, generator-or-suffix) as a SHA-256 of the
   * `(doc_id, kind, text, media_ref, offset)` sequence the calls emit.
+  * The `fetch` class digests the byte-fetch half: for every in-file
+  * media span the generator pass mints, the bytes
+  * [[RawFiles.mediaPayload]] returns for it (or a marker for None).
   * A routing refactor that changes no output keeps every row; a
   * deliberate behaviour change shows up as the rows it moves.
   *
@@ -23,15 +27,20 @@ object IngestGolden {
       scala.collection.mutable.LinkedHashMap.empty[(String, String),
         (MessageDigest, Array[Long])]
 
+    private def row(cls: String, key: String) =
+      rows.getOrElseUpdate((cls, key),
+        (MessageDigest.getInstance("SHA-256"), Array(0L, 0L)))
+
+    private def digest(md: MessageDigest, s: String): Unit = {
+      if (s == null) md.update(1: Byte) else md.update(s.getBytes(UTF_8))
+      md.update(0: Byte)
+    }
+
     def decode(cls: String, key: String, path: String,
                bytes: Array[Byte]): Unit = {
       val docs = RawFiles.decodeAny(path, bytes, "")
-      val (md, counts) = rows.getOrElseUpdate((cls, key),
-        (MessageDigest.getInstance("SHA-256"), Array(0L, 0L)))
-      def put(s: String): Unit = {
-        if (s == null) md.update(1: Byte) else md.update(s.getBytes(UTF_8))
-        md.update(0: Byte)
-      }
+      val (md, counts) = row(cls, key)
+      def put(s: String): Unit = digest(md, s)
       put(s"call:$path")
       docs.foreach { d =>
         counts(0) += 1
@@ -43,7 +52,31 @@ object IngestGolden {
       }
     }
 
-    /** `class \t key \t docs \t spans \t sha256` lines. */
+    /** Fetch every in-file media ref (`<path>#…`) the file's docs mint
+      * against the file's bytes under its [[routedKind]]; the row counts
+      * refs and fetched payloads.
+      */
+    def fetch(key: String, path: String, bytes: Array[Byte]): Unit = {
+      val kind = routedKind(path, bytes)
+      val (md, counts) = row("fetch", key)
+      for {
+        d <- RawFiles.decodeAny(path, bytes, "")
+        s <- d.spans if s.media_ref != null && s.media_ref.startsWith(path + "#")
+      } {
+        counts(0) += 1
+        digest(md, s"$kind:${s.media_ref}")
+        RawFiles.mediaPayload(kind, bytes, s.media_ref) match {
+          case Some(b) =>
+            counts(1) += 1
+            digest(md, s"bytes:${b.length}"); md.update(b)
+          case None => digest(md, "none")
+        }
+      }
+    }
+
+    /** `class \t key \t docs \t spans \t sha256` lines (for `fetch`:
+      * refs and fetched payloads in place of docs and spans).
+      */
     def lines: Vector[String] = rows.toVector.map {
       case ((cls, key), (md, c)) =>
         s"$cls\t$key\t${c(0)}\t${c(1)}\t" +
@@ -164,8 +197,30 @@ object IngestGolden {
         l.decode("gen", g, name(i), bytes(i)))
     }
 
+  /** The kind a top-level file's in-file media refs are fetched under:
+    * the [[RawFiles.decodeAny]] routing — `.warc.gz`/`.tar.gz` by their
+    * double suffix, container suffixes as themselves, else the content
+    * sniff over the suffix kind.
+    */
+  def routedKind(path: String, bytes: Array[Byte]): String = {
+    val lp = path.toLowerCase
+    if (lp.endsWith(".warc.gz")) "warc"
+    else if (lp.endsWith(".tar.gz")) "tar"
+    else {
+      val k = FrontEnds.TextExt.getOrElse(FrontEnds.ext(lp), "")
+      if (Set("warc", "zip", "tar", "eml", "mbox")(k)) k
+      else FrontEnds.sniff(bytes).fold(k)(_.kind)
+    }
+  }
+
+  /** The byte-fetch half of the generator pass. */
+  def fetched(l: Ledger): Unit =
+    generators.foreach { case (g, name, bytes) =>
+      (0 until PerGenerator).foreach(i => l.fetch(g, name(i), bytes(i)))
+    }
+
   def all(l: Ledger): Unit = {
-    random(l); cross(l); truncations(l); generated(l)
+    random(l); cross(l); truncations(l); generated(l); fetched(l)
   }
 
   /** The committed golden rows of one class. */
